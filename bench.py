@@ -204,9 +204,9 @@ def main() -> int:
         except Exception as exc:  # pragma: no cover - defensive
             full_errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
         print(f"## full {qid}: {timings_full.get(qid, 'ERR')}", file=sys.stderr)
-        # A query may legitimately cache (agg_cached_dashboard's shared scan);
-        # release it so pinned blocks don't distort the remaining ~100 timed
-        # entries (periodicGC cannot reclaim referenced cache blocks).
+        # A query may leave persisted blocks behind; release them so pinned
+        # blocks don't distort the remaining ~100 timed entries (periodicGC
+        # cannot reclaim referenced cache blocks).
         spark.catalog.clearCache()
 
     # Full-tier detail goes to a sidecar file, NOT stdout: the driver's tail

@@ -136,24 +136,22 @@ def describe_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """
     # ONE aggregate job over all columns (at 100 TB, one scan — not one per
     # column), then a stack() unpivot of the single result row into long form.
-    aggs: list[Column] = []
-    for c in cols:
-        aggs += [
-            F.count(F.col(c)).alias(f"{c}__n"),
-            F.round(F.avg(c), 6).alias(f"{c}__mean"),
-            F.round(F.stddev_samp(c), 6).alias(f"{c}__stddev"),
-            F.round(F.min(c).cast("double"), 6).alias(f"{c}__min"),
-            F.round(F.max(c).cast("double"), 6).alias(f"{c}__max"),
-        ]
-    row = df.agg(*aggs)
-    stacked = ", ".join(
-        f"'{c}', `{c}__n`, `{c}__mean`, `{c}__stddev`, `{c}__min`, `{c}__max`"
-        for c in cols
+    # SQL strings, not Column chains: each F.* call is a JVM round trip.
+    stats = {
+        "n": "count(`{c}`)",
+        "mean": "round(avg(`{c}`), 6)",
+        "stddev": "round(stddev_samp(`{c}`), 6)",
+        "min": "round(CAST(min(`{c}`) AS DOUBLE), 6)",
+        "max": "round(CAST(max(`{c}`) AS DOUBLE), 6)",
+    }
+    row = df.selectExpr(
+        *(f"{agg.format(c=c)} AS `{c}__{name}`" for c in cols for name, agg in stats.items())
     )
-    return row.select(
-        F.expr(
-            f"stack({len(cols)}, {stacked}) AS (column, n, mean, stddev, min, max)"
-        )
+    stacked = ", ".join(
+        f"'{c}', " + ", ".join(f"`{c}__{name}`" for name in stats) for c in cols
+    )
+    return row.selectExpr(
+        f"stack({len(cols)}, {stacked}) AS (column, n, mean, stddev, min, max)"
     )
 
 

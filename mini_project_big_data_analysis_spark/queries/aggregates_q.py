@@ -61,13 +61,10 @@ def agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     out = describe_stats(li, ["l_quantity", "l_discount", "l_tax"])
     # 4dp (not 6): stddev merge-order noise at |x|~1e4 can reach ~1e-6.
-    return out.select(
+    return out.selectExpr(
         "column",
         "n",
-        F.round("mean", 4).alias("mean"),
-        F.round("stddev", 4).alias("stddev"),
-        F.round("min", 4).alias("min"),
-        F.round("max", 4).alias("max"),
+        *(f"round({c}, 4) AS {c}" for c in ("mean", "stddev", "min", "max")),
     )
 
 

@@ -29,7 +29,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -62,15 +62,15 @@ def _ts_ns_literal(ts: str) -> int:
     return int(dt.timestamp()) * 1_000_000_000
 
 
-#: (path, mtime_ns, size) → the ``ts`` DataType the runtime's reader
-#: surfaces for that file. The probe itself is a footer-inference pass
-#: (~100-150 ms of driver time, round-17 measurement) that load_events
-#: used to pay ON EVERY CALL; the runtime's answer for a given file can't
-#: change within a process, so it is probed once and subsequent reads pass
-#: an explicit schema (footer reads skipped). Keyed on mtime+size so a
-#: rewritten file re-probes. Caches a TYPE, never data or file listings —
-#: every query still scans the parquet.
-_TS_TYPE_CACHE: dict[tuple, object] = {}
+#: (path, mtime_ns, size) → the schema the runtime's reader infers for that
+#: file. The probe itself is a footer-inference pass (~100-150 ms of driver
+#: time, round-17 measurement) that load_events used to pay ON EVERY CALL;
+#: the runtime's answer for a given file can't change within a process, so
+#: it is probed once and later reads pass the probed schema as is (footer
+#: reads skipped). Keyed on mtime+size so a rewritten file re-probes. Caches
+#: a SCHEMA, never data or file listings — every query still scans the
+#: parquet.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
 def _events_scan(spark: SparkSession, path: str):
@@ -78,37 +78,29 @@ def _events_scan(spark: SparkSession, path: str):
     only on first contact with a given file."""
     import os
 
-    from ..schemas import EVENTS as _EVENTS_DECLARED
-    from pyspark.sql.types import StructField, StructType
-
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
     except OSError:
         key = (path, 0, 0)
-    ts_type = _TS_TYPE_CACHE.get(key)
-    if ts_type is None:
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
         try:
             raw = spark.read.parquet(path)
-            ts_type = raw.schema["ts"].dataType
+            schema = raw.schema
         except Exception:
             # Legacy reader refuses INT64(TIMESTAMP(NANOS)) outright: fall
             # back to the nanos-as-long escape hatch and retry.
             spark.conf.set(_NANOS_CONF, "true")
             raw = spark.read.parquet(path)
-            ts_type = raw.schema["ts"].dataType
-        _TS_TYPE_CACHE[key] = ts_type
-        return raw, ts_type
+            schema = raw.schema
+        _SCHEMA_CACHE[key] = schema
+        return raw, schema["ts"].dataType
+    ts_type = schema["ts"].dataType
     if isinstance(ts_type, LongType):
-        # the cached type came from the legacy fallback; a sibling session
+        # the cached schema came from the legacy fallback; a sibling session
         # created after the probe needs the conf too (session-scoped)
         spark.conf.set(_NANOS_CONF, "true")
-    schema = StructType(
-        [
-            StructField("ts", ts_type, f.nullable) if f.name == "ts" else f
-            for f in _EVENTS_DECLARED.fields
-        ]
-    )
     return spark.read.schema(schema).parquet(path), ts_type
 
 

@@ -116,8 +116,8 @@ def audit(spark, sf_dir: str, ids: list[str]) -> dict[str, dict[str, int]]:
             f"spill={rec['spill']:,} B/row={bpr:.1f} stages={rec['stages']}",
             file=sys.stderr,
         )
-        # agg_cached_dashboard pins blocks by design; drop them so cached
-        # scans don't zero the next id's input-byte denominator
+        # drop any blocks a query left persisted so cached scans don't zero
+        # the next id's input-byte denominator
         spark.catalog.clearCache()
     return out
 

@@ -50,8 +50,8 @@ def main() -> int:
         # the 2× regression guard must cover every registered id.
         d = median3(duck_run) if q.oracle is not None else None
         s = median3(spark_run)
-        # release any cache a query legitimately builds (agg_cached_dashboard)
-        # so pinned blocks don't distort the remaining entries
+        # release any cache a query leaves behind so pinned blocks don't
+        # distort the remaining entries
         spark.catalog.clearCache()
         rows.append((qid, d, s))
         dtxt = f"duck={d:.3f}s" if d is not None else "duck=—"

@@ -14,14 +14,26 @@ import sys
 import time
 
 
+USAGE = "usage: python scripts/capture_plan.py SF_DIR TAG QID [QID ...]"
+
+
 def main() -> int:
+    if len(sys.argv) < 4:
+        print(USAGE, file=sys.stderr)
+        return 2
     sf_dir, tag, *qids = sys.argv[1:]
     from mini_project_big_data_analysis_spark.queries import all_queries
+
+    registry = all_queries()
+    unknown = [q for q in qids if q not in registry]
+    if unknown:
+        print(f"unknown query id(s): {' '.join(unknown)}\n{USAGE}", file=sys.stderr)
+        return 2
+
     from mini_project_big_data_analysis_spark.session import get_spark
 
     spark = get_spark(app_name="mpbda-capture")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = all_queries()
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
     os.makedirs(outdir, exist_ok=True)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -8,6 +8,8 @@ run/entry reuse the fixture.
 
 from __future__ import annotations
 
+import pytest
+
 from mini_project_big_data_analysis_spark.__main__ import cli_main
 from mini_project_big_data_analysis_spark.queries import all_queries
 
@@ -60,3 +62,20 @@ def test_run_explain_prints_plan(spark, capsys):
 def test_entry_runs_flagship(spark, capsys):
     assert cli_main(["entry", "--sf-dir", SF_DIR, "--show", "2"], spark=spark) == 0
     assert "region" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize(
+    "args",
+    [[], ["sf"], ["sf", "tag"], ["sf", "tag", "no_such_query"], ["sf", "tag", "agg_describe", "bogus"]],
+)
+def test_capture_plan_bad_args_never_start_a_session(monkeypatch, capsys, args):
+    from mini_project_big_data_analysis_spark import session
+    from scripts import capture_plan
+
+    def no_session(*a, **k):
+        raise AssertionError("get_spark called for bad arguments")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr("sys.argv", ["capture_plan.py", *args])
+    assert capture_plan.main() != 0
+    assert capture_plan.USAGE in capsys.readouterr().err

@@ -6,7 +6,7 @@ a fixture or declared-schema drift fail loudly instead of corrupting scans."""
 from __future__ import annotations
 
 from mini_project_big_data_analysis_spark.sources.events import (
-    _TS_TYPE_CACHE,
+    _SCHEMA_CACHE,
     load_events,
 )
 from mini_project_big_data_analysis_spark.sources.readers import (
@@ -26,10 +26,29 @@ def test_scan_schemas_match_footer_inference(spark, sf_dir):
 
 def test_events_probe_cache_is_schema_stable(spark, sf_dir):
     first = load_events(spark, sf_dir).schema
-    assert _TS_TYPE_CACHE, "probe cache not populated"
-    second = load_events(spark, sf_dir).schema  # cached-type path
+    assert _SCHEMA_CACHE, "probe cache not populated"
+    second = load_events(spark, sf_dir).schema  # cached-schema path
     assert first == second
     # values identical through both paths: the cached-schema read must see
     # the same rows the inference read did
     a = load_events(spark, sf_dir)
     assert a.count() > 0
+
+
+def test_events_probe_cache_keeps_probed_non_ts_fields(spark, tmp_path):
+    """The cache holds the whole probed schema: a file whose non-``ts``
+    field differs from ``schemas.EVENTS`` (``user_id`` as a string here)
+    reads with that same schema on the cached path, not the declared one."""
+    from mini_project_big_data_analysis_spark.schemas import EVENTS
+
+    spark.sql(
+        "SELECT 1L AS event_id, TIMESTAMP'2024-01-01 00:00:00' AS ts,"
+        " 'u1' AS user_id, 'click' AS event_type, 1.5D AS value, '{}' AS props"
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    assert EVENTS["user_id"].dataType.typeName() != "string"
+
+    first = load_events(spark, str(tmp_path))
+    second = load_events(spark, str(tmp_path))  # cached-schema path
+    assert first.schema == second.schema
+    assert second.schema["user_id"].dataType.typeName() == "string"
+    assert second.collect() == first.collect()

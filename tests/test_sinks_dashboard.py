@@ -1,6 +1,6 @@
-"""Round-3 surfaces: keyed upsert sink semantics, shared-scan cached
-dashboard plan, Kafka wire-schema decode composability, and fixture-scale
-ANN recall pins."""
+"""Round-3 surfaces: keyed upsert sink semantics, one-scan dashboard
+refresh plan and freshness, Kafka wire-schema decode composability, and
+fixture-scale ANN recall pins."""
 
 from __future__ import annotations
 
@@ -269,21 +269,59 @@ def test_upsert_rewrites_only_affected_buckets(spark):
     assert untouched and all(after[b] == before[b] for b in untouched)
 
 
-def test_cached_dashboard_reuses_one_scan(spark, sf_dir):
+def test_cached_dashboard_reads_source_once(spark, sf_dir):
+    """One refresh is one file scan and one aggregate: no cached relation,
+    no per-metric branch, at most 4 Spark jobs per materialisation."""
+    from perfbench.spans import JobCounter
+
     from mini_project_big_data_analysis_spark.queries.dashboard_q import (
         cached_dashboard_metrics,
     )
     from mini_project_big_data_analysis_spark.sources.readers import read_table
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # the session is shared with other tests
+    jobs = JobCounter(spark)
     out = cached_dashboard_metrics(read_table(spark, sf_dir, "events"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # every aggregate branch reads the cached columnar copy, not the file
-    assert plan.count("InMemoryTableScan") >= 6
+    for _ in range(2):
+        first = jobs.next_job()
+        rows = {(r.metric, r.key): r.value for r in out.collect()}
+        assert jobs.next_job() - first <= 4
+    assert cache_manager.isEmpty()
+    # the final adaptive plan, without the initial plan AQE prints beside it
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    assert "InMemoryTableScan" not in plan
     # and the metrics themselves are sane
-    rows = {(r.metric, r.key): r.value for r in out.collect()}
     assert rows[("type_distinct", "all")] >= 1
     n_total = sum(v for (m, _), v in rows.items() if m == "type_count")
     assert n_total > 0
+
+
+def test_cached_dashboard_sees_rewritten_events(spark, sf_dir, sf_dir_mid, tmp_path):
+    """A refresh after ``events.parquet`` is rewritten in place reports the
+    new file's rows, in the same session."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from mini_project_big_data_analysis_spark.queries.dashboard_q import (
+        agg_cached_dashboard,
+    )
+
+    events = str(tmp_path / "events.parquet")
+
+    def type_count_total() -> float:
+        rows = agg_cached_dashboard(spark, str(tmp_path)).collect()
+        return sum(r.value for r in rows if r.metric == "type_count")
+
+    shutil.copyfile(f"{sf_dir}/events.parquet", events)
+    n_old = pq.ParquetFile(events).metadata.num_rows
+    assert type_count_total() == n_old
+    shutil.copyfile(f"{sf_dir_mid}/events.parquet", events)
+    n_new = pq.ParquetFile(events).metadata.num_rows
+    assert n_new != n_old
+    assert type_count_total() == n_new
 
 
 def test_kafka_wire_decode_composes_with_clean_and_agg(spark, sf_dir):
