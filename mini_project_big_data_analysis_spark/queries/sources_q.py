@@ -12,12 +12,11 @@ round-trip, which is *stronger* than rows-only).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from .base import load, register
 
 
@@ -76,9 +75,7 @@ def snk_append_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 0)
         .select("c_custkey", "c_name", "c_acctbal")
     )
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"append_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("append")
     df.write.mode("append").parquet(path)
     return spark.read.parquet(path)
 
@@ -102,9 +99,7 @@ def snk_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_partitioned
 
     ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"part_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("part")
     write_partitioned(ev, path, ["event_date"])
     min_date = ev.agg(F.min("event_date")).collect()[0][0]
     # Explicit schema on the scan-back: a zero-row source writes zero
@@ -157,9 +152,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"orc_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("orc")
     nation.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -231,9 +224,7 @@ def snk_upsert_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"upsert_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("upsert")
     upsert_parquet(spark, path, base, keys=["o_orderkey"])
     updates = base.filter(F.col("o_custkey") < 50).withColumn(
         "o_orderpriority", F.lit("UPDATED")
@@ -259,9 +250,7 @@ def snk_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves losslessness, tests pin the file-count drop."""
     from ..sources.writers import compact_files
 
-    frag = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"frag_{uuid.uuid4().hex}"
-    )
+    frag = scratch_dir("frag")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
     sup.repartition(32).write.parquet(frag)
     return compact_files(spark, frag, target_bytes=64 * 1024 * 1024)
@@ -290,9 +279,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_partitioned
 
     ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"dpp_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("dpp")
     facts = ev.select("event_date", "value")
     write_partitioned(facts, path, ["event_date"])
     # explicit schema: survives a zero-partition (empty-source) layout
@@ -323,9 +310,7 @@ def src_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange. Line-per-record requires newline-free rows (the fixture
     corpus is); anything richer belongs in the structured formats."""
     docs = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"text_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("text")
     docs.select(F.col("text").alias("value")).write.text(path)
     return spark.read.text(path)
 
@@ -355,9 +340,7 @@ def snk_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    table_dir = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"tt_{uuid.uuid4().hex}"
-    )
+    table_dir = scratch_dir("tt")
     write_snapshot(nation, table_dir)
     v1 = nation.withColumn(
         "n_name",
@@ -409,9 +392,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read per file at planning, no data scan), and per-file column pruning
     still applies afterwards. The oracle expresses the same union
     relationally. Aggregated output keeps the check row-order-free."""
-    base = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"evo_{uuid.uuid4().hex}"
-    )
+    base = scratch_dir("evo")
     ev = load(spark, sf_dir, "events")
     ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.parquet(
         os.path.join(base, "gen=1")
@@ -480,9 +461,7 @@ def src_kafka_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in rows
     ]
-    seg_dir = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"kseg_{uuid.uuid4().hex}"
-    )
+    seg_dir = scratch_dir("kseg")
     os.makedirs(seg_dir)
     with open(os.path.join(seg_dir, "00000000000000000000.log"), "wb") as f:
         f.write(
@@ -528,9 +507,7 @@ def src_jdbc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     through Derby's DOUBLE/VARCHAR types must be lossless."""
     from ..sources.writers import DERBY_DRIVER, derby_embedded_url
 
-    db_dir = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"jdbc_{uuid.uuid4().hex}", "db"
-    )
+    db_dir = os.path.join(scratch_dir("jdbc"), "db")
     url = derby_embedded_url(db_dir)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
@@ -566,9 +543,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the identity: a lossless round-trip IS the check.
     Distributed shape identical to the csv/text round-trips (one task per
     file split on read; rowTag framing is splittable on write)."""
-    out = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"xml_{uuid.uuid4().hex}"
-    )
+    out = scratch_dir("xml")
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -611,9 +586,7 @@ def src_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = load(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), "mpbda_footer_stats", uuid.uuid4().hex
-    )
+    out = scratch_dir("footer_stats")
     (
         docs.select(
             "doc_id",

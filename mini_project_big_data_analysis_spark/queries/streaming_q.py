@@ -159,19 +159,17 @@ def stream_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a byte-exact arithmetic oracle: the deterministic observe function
     makes even the streaming composite hash-checkable, not just rows-only.
     10-minute tumbling windows on the observation's epoch time; the bounded
-    stream (max_cycles) drains under processAllAvailable and the memory
-    sink holds the complete-mode result."""
-    import uuid as _uuid
-
+    stream (max_cycles) runs to its end under Trigger.AvailableNow and the
+    memory sink holds the complete-mode result."""
+    from ..scratch import scratch_dir
     from ..sources.weather_source import register_weather_source
-    from ..streaming.pipeline import _drain_and_stop, _stream_session
+    from ..streaming.pipeline import _run_stream, _stream_session
 
     # 16 rows per poll sweep: state partitioning derives to the floor (4)
     # instead of the batch default — the windowed agg's state stores pay
     # per-instance commit cost every one of the 10 micro-batches.
     spark = _stream_session(spark, 0)
     register_weather_source(spark)
-    name = f"wx_{_uuid.uuid4().hex[:10]}"
     agg = (
         spark.readStream.format("weather_poll")
         .option("max_cycles", 10)
@@ -197,14 +195,7 @@ def stream_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_temp",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return spark.table(name)
+    return _run_stream(spark, agg, scratch_dir("wx"), mode="complete")
 
 
 @register(

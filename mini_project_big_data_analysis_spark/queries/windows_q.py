@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from .base import load, register
 
 _SESSION_ORACLE = """
@@ -140,14 +141,8 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + schema'd CSV source (source-format breadth: parquet/JSON/
     CSV all covered). Explicit schema on read — no inference job."""
-    import os
-    import tempfile
-    import uuid
-
     region = load(spark, sf_dir, "region")
-    path = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"csv_{uuid.uuid4().hex}"
-    )
+    path = scratch_dir("csv")
     region.write.mode("overwrite").option("header", "true").csv(path)
     return spark.read.schema("r_regionkey INT, r_name STRING").option(
         "header", "true"

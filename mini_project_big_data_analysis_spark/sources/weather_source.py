@@ -83,9 +83,10 @@ class WeatherPollStreamReader(SimpleDataSourceStreamReader):
     of silently skipping to latest (the reference's restart data-loss mode).
 
     ``max_cycles`` bounds the stream (0 = unbounded, the live-poll shape):
-    past the bound ``read`` stops advancing the offset, so
-    ``processAllAvailable()`` sees a caught-up stream and returns — without
-    it the ever-advancing offset makes that call spin forever.
+    past the bound ``read`` stops advancing the offset, so a run to the end
+    of the available data (``Trigger.AvailableNow``, or waiting until the
+    query has caught up) sees a caught-up stream and finishes — without it
+    the ever-advancing offset keeps such a run going forever.
 
     ``cycles_per_batch`` (default 1) is the per-trigger admission cap — the
     ``maxOffsetsPerTrigger`` knob of this source. 1 replays the producer's

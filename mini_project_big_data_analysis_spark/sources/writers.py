@@ -8,11 +8,12 @@ at scale the same code writes a partitioned table instead of one directory.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..scratch import scratch_dir
 
 
 def append_parquet(df: DataFrame, path: str) -> None:
@@ -64,16 +65,6 @@ def write_bucketed_table(
     if path is not None:
         writer = writer.option("path", path)
     writer.bucketBy(n_buckets, bucket_col).sortBy(bucket_col).saveAsTable(table)
-
-
-def write_and_read_back(spark: SparkSession, df: DataFrame, subdir: str | None = None) -> DataFrame:
-    """Materialize through a parquet sink and scan the result — the testable
-    form of the append sink (round-trips encoding, stats, and partitioning).
-    """
-    base = os.path.join(tempfile.gettempdir(), "mpbda_spark_sink")
-    path = os.path.join(base, subdir or uuid.uuid4().hex)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 class KeyedTableStore:
@@ -700,9 +691,7 @@ def compact_files(
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     total = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(total / target_bytes))
-    compacted = os.path.join(
-        tempfile.gettempdir(), "mpbda_spark_sink", f"compact_{uuid.uuid4().hex}"
-    )
+    compacted = scratch_dir("compact")
     spark.read.parquet(path).coalesce(n_files).write.parquet(compacted)
     return spark.read.parquet(compacted)
 

@@ -16,13 +16,25 @@ Tests drive these with file-source streams over the driver's events parquet
 (Kafka isn't in the container); the DataFrame graph is source-agnostic — the
 same ``clean_event_stream``/``tumbling_agg`` compose onto
 ``spark.readStream.format("kafka")`` unchanged.
+
+One run harness. Every runner builds only its DataFrame graph (and, for a
+parquet sink, the sink's DDL) and hands it to ``_run_stream``, which owns
+everything else: the query name (the run directory's basename), the
+checkpoint at ``run_dir/ck``, ``Trigger.AvailableNow``, the completion wait
+bounded by ``STREAM_BUDGET_S``, the ``PROGRESS_SINK`` capture and the
+read-back. AvailableNow honours ``maxFilesPerTrigger``, so the paced
+multi-batch runners (arrival files from ``_arrival_stream``, one file per
+micro-batch) finish on the same path as the single-batch ones.
+
+Scratch lifetime. Run directories come from ``scratch.scratch_dir`` and live
+under the process's one scratch root, which is removed when the interpreter
+exits (and swept by the next process if this one was killed). Nothing is
+removed per run: the returned frames read their sinks lazily.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import EVENTS
+from ..scratch import scratch_dir
 from ..sources.events import raw_epoch_to_ts
 
 #: The on-disk shape: ``ts`` is INT64 TIMESTAMP(NANOS), which Spark's reader
@@ -62,6 +75,9 @@ KAFKA_WIRE_SCHEMA = (
     "timestamp TIMESTAMP, timestampType INT"
 )
 
+#: Sink DDL of the cleaned-event runners (clean sink, fan-out, dedup).
+CLEAN_DDL = "event_id long, user_id long, event_type string, value double"
+
 
 #: Per-query completion budget for the availableNow runners, seconds.
 #: Overridable for large-fixture runs (the sf100 differential tier drives
@@ -70,10 +86,12 @@ KAFKA_WIRE_SCHEMA = (
 STREAM_BUDGET_S = float(os.environ.get("SPARK_GRAFT_STREAM_BUDGET_S", "300"))
 
 
-#: When a list, every completed availableNow query appends its
-#: per-micro-batch progress records here (scripts/audit_stream_state.py
-#: sets it to collect state-operator metrics — rows in state, watermark
-#: evictions, state memory — without touching the pipelines themselves).
+#: When a list, every completed streaming run appends one record per query
+#: here: ``{"query_id", "name", "progress"}``, the last being the
+#: per-micro-batch progress (scripts/audit_stream_state.py sets it to
+#: collect state-operator metrics — rows in state, watermark evictions,
+#: state memory — without touching the pipelines themselves). ``name`` says
+#: which path ran (e.g. ``tws_dedup_<hex>`` or ``tws_dedup_fallback_<hex>``).
 #: None (the default) is free: production runs never pay for collection.
 #: NOTE: ``q.recentProgress`` retains only the LAST
 #: ``spark.sql.streaming.numRecentProgressUpdates`` records (default
@@ -96,8 +114,7 @@ PROGRESS_SINK: list | None = None
 #: stateful id. Deriving the partition count from the stream's input size
 #: (floor 4, capped at the session default so a cluster-sized conf still
 #: wins at scale) keeps the same plan shape at every scale factor while
-#: sizing the fixed overhead to the data. Override:
-#: $SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS.
+#: sizing the fixed overhead to the data.
 STREAM_TARGET_BYTES_PER_PARTITION = 32 << 20
 
 
@@ -114,19 +131,6 @@ STREAM_FLOOR_JVM_STATE = 4
 STREAM_FLOOR_PYTHON_STATE = 16
 
 
-def _stream_shuffle_partitions(
-    spark: SparkSession, est_input_bytes: int, floor: int
-) -> int:
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    n_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    derived = max(
-        floor, -(-int(est_input_bytes) // STREAM_TARGET_BYTES_PER_PARTITION)
-    )
-    return min(n_default, derived)
-
-
 def _stream_session(
     spark: SparkSession,
     est_input_bytes: int,
@@ -135,7 +139,8 @@ def _stream_session(
     """A session for ONE streaming run whose ``spark.sql.shuffle.partitions``
     (= the stateful operators' state-store partition count, recorded in the
     checkpoint at first batch) is sized to the stream's input instead of the
-    batch default.
+    batch default: ``ceil(est_input_bytes / STREAM_TARGET_BYTES_PER_PARTITION)``
+    clamped to ``[floor, session default]``.
 
     Why a child session: state-store partitioning is only configurable
     through ``spark.sql.shuffle.partitions``, and set/restore on the shared
@@ -148,8 +153,12 @@ def _stream_session(
     default the parent is returned unchanged (the tests' 4-partition
     sessions take this path, so their pinned behavior is byte-identical).
     """
-    n = _stream_shuffle_partitions(spark, est_input_bytes, floor)
-    if n == int(spark.conf.get("spark.sql.shuffle.partitions")):
+    n_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = min(
+        n_default,
+        max(floor, -(-int(est_input_bytes) // STREAM_TARGET_BYTES_PER_PARTITION)),
+    )
+    if n == n_default:
         return spark
     child = spark.newSession()
     confs = spark._jsparkSession.sessionState().conf().getAllConfs()
@@ -196,18 +205,17 @@ def _events_bytes(sf_dir: str) -> int:
 
 
 def _capture_progress(q, spark: SparkSession) -> None:
-    """Append ``q``'s micro-batch progress to PROGRESS_SINK (no-op when
-    the sink is None). Raises if the capture is truncated at Spark's
+    """Append ``q``'s name and micro-batch progress to PROGRESS_SINK (no-op
+    when the sink is None). Raises if the capture is truncated at Spark's
     ``numRecentProgressUpdates`` retention cap — a capped capture means
     the earliest batches' metrics are already gone and every total the
     state audit derives from them would be silently wrong (ADVICE r13).
 
-    ``spark`` is the session that STARTED ``q`` (threaded in by the
-    runners) — the retention cap in effect for ``q.recentProgress`` lives
-    there, not in whatever ``getActiveSession()`` resolves on the calling
-    thread; the previous active-session lookup could fall back to the
-    100 default and falsely raise on an audit run that had already lifted
-    the cap (ADVICE r14)."""
+    ``spark`` is the session that STARTED ``q`` — the retention cap in
+    effect for ``q.recentProgress`` lives there, not in whatever
+    ``getActiveSession()`` resolves on the calling thread; the previous
+    active-session lookup could fall back to the 100 default and falsely
+    raise on an audit run that had already lifted the cap (ADVICE r14)."""
     if PROGRESS_SINK is None:
         return
     prog = list(q.recentProgress)
@@ -221,41 +229,14 @@ def _capture_progress(q, spark: SparkSession) -> None:
             "spark.sql.streaming.numRecentProgressUpdates above the "
             "fixture's micro-batch count"
         )
-    PROGRESS_SINK.append({"query_id": str(q.id), "progress": prog})
+    PROGRESS_SINK.append({"query_id": str(q.id), "name": q.name, "progress": prog})
 
 
-def _await_done(q, spark) -> None:
-    """Block until an availableNow query terminates, failing LOUDLY on
-    budget exhaustion. The previous inline ``q.awaitTermination(300)``
-    ignored the boolean result, so a query still running at the deadline
-    let the caller read a PARTIAL (or empty) sink table as if it were the
-    final answer — exactly the silent-wrong-output failure the strong
-    oracles exist to catch, first observed when `stream_stateful_stats`
-    returned 0 rows at the sf100 tier (100M events > 300 s through
-    applyInPandasWithState). Stopping the query on timeout keeps the
-    SparkSession reusable for the caller's error handling."""
-    if not q.awaitTermination(STREAM_BUDGET_S):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} still running after "
-            f"{STREAM_BUDGET_S:.0f}s; raise SPARK_GRAFT_STREAM_BUDGET_S for "
-            "large fixtures instead of reading a partial sink"
-        )
-    _capture_progress(q, spark)
-
-
-def _drain_and_stop(q, spark) -> None:
-    """``processAllAvailable`` + ``stop`` for the paced (non-availableNow)
-    runners, with the same progress capture as ``_await_done`` so the
-    state audit sees the multi-batch ids too. processAllAvailable blocks
-    until the bounded source is caught up, so a successful return means
-    the sink is complete — the stop in ``finally`` keeps the session
-    reusable if the query instead raises."""
-    try:
-        q.processAllAvailable()
-        _capture_progress(q, spark)
-    finally:
-        q.stop()
+def _write_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
+    """The idempotent parquet sink step: each micro-batch overwrites its own
+    ``path/batch_id=N`` directory, so a batch replayed after a partial write
+    + restart rewrites the SAME directory instead of appending duplicates."""
+    batch_df.write.mode("overwrite").parquet(os.path.join(path, f"batch_id={batch_id}"))
 
 
 def _read_sink_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
@@ -275,6 +256,151 @@ def _read_sink_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)
     return spark.read.parquet(path).select(*[f.name for f in schema.fields])
+
+
+def _run_stream(
+    spark: SparkSession,
+    df: DataFrame,
+    run_dir: str,
+    *,
+    mode: str = "append",
+    sink="memory",
+) -> DataFrame | None:
+    """Run the streaming ``df`` to completion and return what it wrote —
+    the one place a streaming query starts.
+
+    The query is named after ``run_dir``'s basename, checkpoints to
+    ``run_dir/ck`` and runs with ``Trigger.AvailableNow`` (everything
+    available, honouring the source's per-trigger limits, then stop).
+    ``sink`` is one of:
+
+    - ``"memory"``: an in-memory table, returned as ``spark.table(name)``
+      — for results bounded by key cardinality, not by data volume;
+    - a DDL string: parquet under ``run_dir/sink``, one ``batch_id=N``
+      directory per micro-batch (``_write_batch``), or the whole directory
+      overwritten per trigger in ``complete`` mode; returned through
+      ``_read_sink_or_empty`` with that DDL;
+    - a ``foreachBatch`` callable (fan-out, upsert): returns None and the
+      caller reads its own output.
+
+    Completion is bounded by ``STREAM_BUDGET_S`` and fails LOUDLY when the
+    budget runs out: an unchecked wait let a caller read a PARTIAL (or
+    empty) sink as the final answer — the silent-wrong-output failure the
+    strong oracles exist to catch, first seen when ``stream_stateful_stats``
+    returned 0 rows at the sf100 tier. Stopping the query on timeout keeps
+    the session reusable for the caller's error handling."""
+    name = os.path.basename(run_dir)
+    path = os.path.join(run_dir, "sink")
+    writer = (
+        df.writeStream.queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(run_dir, "ck"))
+        .trigger(availableNow=True)
+    )
+    if sink == "memory":
+        writer = writer.format("memory")
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif mode == "complete":
+        writer = writer.foreachBatch(
+            lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(path)
+        )
+    else:
+        writer = writer.foreachBatch(
+            lambda batch_df, batch_id: _write_batch(batch_df, batch_id, path)
+        )
+    q = writer.start()
+    if not q.awaitTermination(STREAM_BUDGET_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name} still running after "
+            f"{STREAM_BUDGET_S:.0f}s; raise SPARK_GRAFT_STREAM_BUDGET_S for "
+            "large fixtures instead of reading a partial sink"
+        )
+    _capture_progress(q, spark)
+    if sink == "memory":
+        return spark.table(name)
+    if callable(sink):
+        return None
+    return _read_sink_or_empty(spark, path, sink)
+
+
+def _arrival_stream(spark: SparkSession, run_dir: str, pieces: list) -> DataFrame:
+    """A stream that delivers ``pieces`` one micro-batch each, in order.
+
+    Each piece becomes one time-ordered parquet file (``run_dir/in/00.parquet``,
+    ``01.parquet``, … with ascending mtimes — the arrival order
+    ``maxFilesPerTrigger=1`` replays), all written in ONE Spark job: each
+    piece is tagged and the tagged union is written once with
+    ``partitionBy`` (hash repartition on the literal tag maps a tag to one
+    partition, so each piece directory holds exactly one part file). The
+    round-15 shape wrote each piece with its own ``coalesce(1)`` job — N
+    scans of the source and N sequential single-task jobs before the stream
+    even started. A piece with no rows produces no directory under dynamic
+    partitioning, so that piece gets an explicitly written empty file and
+    the stream sees the identical batch sequence (scripts/empty_sweep.py
+    pins the zero-row fixture)."""
+    import glob
+    import shutil
+    import time as _time
+
+    indir = os.path.join(run_dir, "in")
+    os.makedirs(indir)
+    tagged = None
+    for i, piece in enumerate(pieces):
+        t = piece.withColumn("__piece", F.lit(i))
+        tagged = t if tagged is None else tagged.unionByName(t)
+    tmp = os.path.join(run_dir, "tmp")
+    (
+        tagged.repartition(len(pieces), "__piece")
+        .write.mode("overwrite")
+        .partitionBy("__piece")
+        .parquet(tmp)
+    )
+    now = _time.time()
+    for i, piece in enumerate(pieces):
+        parts = glob.glob(os.path.join(tmp, f"__piece={i}", "part-*.parquet"))
+        dst = os.path.join(indir, f"{i:02d}.parquet")
+        if not parts:  # empty piece: write its empty file explicitly
+            empty_tmp = os.path.join(tmp, f"empty_{i}")
+            piece.limit(0).coalesce(1).write.parquet(empty_tmp)
+            parts = glob.glob(os.path.join(empty_tmp, "part-*.parquet"))
+        shutil.move(parts[0], dst)
+        os.utime(dst, (now - 500 + i * 100,) * 2)  # mtime = arrival order
+    shutil.rmtree(tmp)
+    return (
+        spark.readStream.schema(pieces[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(indir)
+    )
+
+
+#: Sink DDL of the keyed arrival-file runners (late filter, TWS dedup).
+ARRIVAL_DDL = "event_id long, user_id long, ts timestamp, value double"
+
+
+def _arrival_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event rows the keyed arrival-file runners replay: id, event time,
+    user and value of every event with a value and an event time."""
+    from ..sources.readers import read_table
+
+    return (
+        read_table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
+        .select("event_id", "ts", "user_id", "value")
+    )
+
+
+def _ts_as_string(df: DataFrame) -> DataFrame:
+    """An ``ARRIVAL_DDL`` sink read back with ``ts`` formatted as ``ts_s``
+    (codegen'd ``date_format`` here rather than per-row pandas strftime
+    inside the stateful operators)."""
+    return df.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
+        "value",
+    )
 
 
 def decode_kafka_events(raw: DataFrame) -> DataFrame:
@@ -380,9 +506,7 @@ def tumbling_agg(
     )
 
 
-def run_tumbling_agg_availablenow(
-    spark: SparkSession, sf_dir: str, window_duration: str = "1 hour"
-) -> DataFrame:
+def run_tumbling_agg_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the streaming tumbling agg to completion over the static
     events table (Trigger.AvailableNow → process everything, then stop) and
     return the materialized result.
@@ -399,24 +523,11 @@ def run_tumbling_agg_availablenow(
     emission executor-side; the upstream agg/state graph is unchanged.
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    q = (
-        tumbling_agg(clean_event_stream(read_events_stream(spark, sf_dir)), window_duration)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return spark.table(name)
+    agg = tumbling_agg(clean_event_stream(read_events_stream(spark, sf_dir)))
+    return _run_stream(spark, agg, scratch_dir("tumbling"), mode="complete")
 
 
-def run_clean_to_parquet_availablenow(
-    spark: SparkSession, sf_dir: str, out_path: str | None = None
-) -> DataFrame:
+def run_clean_to_parquet_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consumer's full pipeline (consumer.py:29-78) as Structured
     Streaming with an idempotent foreachBatch parquet sink: source offsets
     are checkpointed and each micro-batch lands in its own ``batch_id=N``
@@ -427,28 +538,10 @@ def run_clean_to_parquet_availablenow(
     of the sink — which must equal the batch-cleaned table (the oracle
     checks exactly that, and stays equal under replay).
     """
-    name = f"sink_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    path = out_path or os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
         "event_id", "user_id", "event_type", "value"
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # batch_id-keyed overwrite = idempotent under micro-batch replay.
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        cleaned.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(spark, path, "event_id long, user_id long, event_type string, value double")
+    return _run_stream(spark, cleaned, scratch_dir("sink"), sink=CLEAN_DDL)
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,8 +557,6 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.readers import read_table
 
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     stream = clean_event_stream(read_events_stream(spark, sf_dir))
     customer = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -486,22 +577,11 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # via foreachBatch, like run_clean_to_parquet_availablenow — a memory
     # sink materializes the whole result driver-side (dev-tool shape) and
     # caps the runner at driver heap; this one scales with the sink store.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        enriched.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
-        spark, path, "event_id long, user_id long, event_type string, nation string"
+    return _run_stream(
+        spark,
+        enriched,
+        scratch_dir("enrich"),
+        sink="event_id long, user_id long, event_type string, nation string",
     )
 
 
@@ -518,41 +598,29 @@ def run_fanout_sinks_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     either. Returns both sinks' contents tagged by sink id — the STRONG
     oracle checks each equals the batch-cleaned table (a lost or doubled
     batch in EITHER sink breaks the hash)."""
-    name = f"fanout_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-    path_a = os.path.join(base, "archive")
-    path_b = os.path.join(base, "serving")
-
+    run_dir = scratch_dir("fanout")
+    paths = {s: os.path.join(run_dir, s) for s in ("archive", "serving")}
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
         "event_id", "user_id", "event_type", "value"
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def write_both(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            for path in (path_a, path_b):
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(path, f"batch_id={batch_id}")
-                )
+            for path in paths.values():
+                _write_batch(batch_df, batch_id, path)
         finally:
             batch_df.unpersist()
 
-    q = (
-        cleaned.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_stream(spark, cleaned, run_dir, sink=write_both)
+    a, b = (
+        _read_sink_or_empty(spark, path, CLEAN_DDL).withColumn("sink", F.lit(s))
+        for s, path in paths.items()
     )
-    _await_done(q, spark)
-    a = _read_sink_or_empty(spark, path_a, "event_id long, user_id long, event_type string, value double").withColumn("sink", F.lit("archive"))
-    b = _read_sink_or_empty(spark, path_b, "event_id long, user_id long, event_type string, value double").withColumn("sink", F.lit("serving"))
     return a.unionByName(b)
 
 
-def run_stream_dedup_availablenow(
-    spark: SparkSession, sf_dir: str, keys: tuple[str, ...] = ("event_id",)
-) -> DataFrame:
+def run_stream_dedup_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup to completion, proven against a REAL
     duplicate delivery: every source file is delivered twice (the
     reference's at-least-once failure mode — a replay after restart,
@@ -599,10 +667,9 @@ def run_stream_dedup_availablenow(
     import shutil
 
     spark = _stream_session(spark, 2 * _events_bytes(sf_dir))
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    delivery = os.path.join(tempfile.gettempdir(), "mpbda_dedup_src", name)
-    os.makedirs(delivery, exist_ok=True)
+    run_dir = scratch_dir("dedup")
+    delivery = os.path.join(run_dir, "in")
+    os.makedirs(delivery)
     src = os.path.join(sf_dir, "events.parquet")
     # Two byte-identical deliveries of the same upstream data. availableNow
     # may batch them together or per-file (4.1.2 measured: one batch per
@@ -616,27 +683,13 @@ def run_stream_dedup_availablenow(
     stream = clean_event_stream(raw.withColumn("ts", raw_epoch_to_ts("ts")))
     deduped = (
         stream.withWatermark("event_time", "1 hour")
-        .dropDuplicatesWithinWatermark([*keys])
+        .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
     # Production sink shape (round 11): idempotent batch_id-keyed parquet
     # instead of the driver-bound memory sink — the dedup STATE is already
     # partition-distributed; this makes the sink side scale too.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(spark, path, "event_id long, user_id long, event_type string, value double")
+    return _run_stream(spark, deduped, run_dir, sink=CLEAN_DDL)
 
 
 def run_stateful_running_stats(
@@ -716,8 +769,6 @@ def run_stateful_running_stats(
         )
 
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     stream = clean_event_stream(read_events_stream(spark, sf_dir))
     shrunk = stream.select("event_type", "value").mapInPandas(
         partials, "event_type string, pn long, ps double, pmn double, pmx double"
@@ -732,16 +783,7 @@ def run_stateful_running_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        running.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    emissions = spark.table(name)
+    emissions = _run_stream(spark, running, scratch_dir("stateful"), mode="update")
     # final emission per key = the complete running totals (strong-oracle
     # shape regardless of how the source split micro-batches)
     from pyspark.sql.window import Window
@@ -771,8 +813,6 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the sink equals the batch band-join byte-for-byte (the oracle).
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     ev = clean_event_stream(read_events_stream(spark, sf_dir))
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -809,79 +849,20 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Production sink shape (round 11): join output is DATA-proportional
     # (pairs, not state-grain), so it lands in batch_id-keyed idempotent
     # parquet rather than a driver-bound memory sink.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        joined.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_stream(
+        spark,
+        joined,
+        scratch_dir("ssjoin"),
+        sink="click_id long, purchase_id long, user_id long, gap_s long",
     )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
-        spark, path, "click_id long, purchase_id long, user_id long, gap_s long"
-    )
-
-
-def _write_arrival_files(spark, base: str, indir: str, pieces: list) -> None:
-    """Materialize ``pieces`` as one time-ordered parquet file each
-    (``indir/00.parquet``, ``01.parquet``, … with ascending mtimes — the
-    arrival order ``maxFilesPerTrigger=1`` replays) in ONE Spark job.
-
-    The round-15 shape wrote each piece with its own ``coalesce(1)`` job —
-    N scans of the source and N sequential single-task jobs before the
-    stream even started (for the four-quarter splitter that was 5 of the
-    id's ~11 jobs). Tagging each piece and writing once with
-    ``partitionBy`` keeps every piece in exactly one task (hash
-    repartition on the literal tag: a tag maps to one partition, so each
-    piece directory holds exactly one part file) and runs the legs in
-    parallel inside a single job. A piece with no rows produces no
-    directory under dynamic partitioning where the old path wrote an empty
-    part file — the fallback writes that empty file so the stream sees the
-    identical batch sequence (scripts/empty_sweep.py pins the zero-row
-    fixture)."""
-    import glob
-    import shutil
-    import time as _time
-
-    tagged = None
-    for i, piece in enumerate(pieces):
-        t = piece.withColumn("__piece", F.lit(i))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    tmp = os.path.join(base, "tmp")
-    (
-        tagged.repartition(len(pieces), "__piece")
-        .write.mode("overwrite")
-        .partitionBy("__piece")
-        .parquet(tmp)
-    )
-    now = _time.time()
-    for i, piece in enumerate(pieces):
-        parts = glob.glob(os.path.join(tmp, f"__piece={i}", "part-*.parquet"))
-        dst = os.path.join(indir, f"{i:02d}.parquet")
-        if parts:
-            shutil.move(parts[0], dst)
-        else:  # empty piece: write the empty file the old per-piece job made
-            empty_tmp = os.path.join(base, f"tmp_empty_{i}")
-            piece.limit(0).coalesce(1).write.mode("overwrite").parquet(empty_tmp)
-            shutil.move(
-                glob.glob(os.path.join(empty_tmp, "part-*.parquet"))[0], dst
-            )
-            shutil.rmtree(empty_tmp)
-        os.utime(dst, (now - 500 + i * 100,) * 2)  # mtime = arrival order
-    shutil.rmtree(tmp)
 
 
 def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed aggregation across MANY micro-batches with checkpointed
-    state — the multi-trigger coverage the availableNow ids (one batch)
-    can't give. The event log is split into four time-ordered files;
-    ``maxFilesPerTrigger=1`` forces one micro-batch per file, so hour
+    state — the multi-trigger coverage the single-batch ids can't give.
+    The event log is split into four time-ordered files;
+    ``maxFilesPerTrigger=1`` (which availableNow honours) forces one
+    micro-batch per file, so hour
     windows straddling a file boundary must MERGE state across batches,
     and append mode must emit each window exactly once after the watermark
     passes it. A far-future sentinel file advances the watermark past
@@ -896,10 +877,6 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     on this runtime, below-watermark rows still aggregate. The files are
     time-ordered so nothing here depends on that behavior.)
     """
-    name = f"mb_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     from ..sources.readers import read_table
 
@@ -933,13 +910,8 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.lit("2030-01-01 00:00:00").cast("timestamp"))
         .select(cols)
     )
-    _write_arrival_files(spark, base, indir, pieces + [sentinel])
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
+    run_dir = scratch_dir("mb")
+    src = _arrival_stream(spark, run_dir, pieces + [sentinel])
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -973,15 +945,7 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+    return _run_stream(spark, agg, run_dir).filter(F.col("event_type") != "sentinel")
 
 
 def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,29 +969,16 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle partition owning the key (the transformWithState scale
     posture); the payload never enters state.
     """
-    import pandas as pd
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..sources.readers import read_table
 
     spark = _stream_session(
         spark, _events_bytes(sf_dir), floor=STREAM_FLOOR_PYTHON_STATE
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
-    _write_arrival_files(
+    run_dir = scratch_dir("late")
+    ev = _arrival_events(spark, sf_dir)
+    src = _arrival_stream(
         spark,
-        base,
-        indir,
+        run_dir,
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
     )
 
@@ -1058,11 +1009,6 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hw is not None:
             state.update((hw,))
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     admitted = src.groupBy("user_id").applyInPandasWithState(
         admit,
         outputStructType="event_id long, user_id long, ts timestamp, value double",
@@ -1072,27 +1018,7 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Production sink shape (round 11): admitted rows are DATA-proportional
     # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
-    sink = os.path.join(base, "sink")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        admitted.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
-    )
+    return _ts_as_string(_run_stream(spark, admitted, run_dir, sink=ARRIVAL_DDL))
 
 
 def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1115,31 +1041,18 @@ def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..sources.readers import read_table
     from ..sources.writers import ParquetBucketStore, upsert_into
 
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"fbu_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
+    run_dir = scratch_dir("fbu")
+    ev = _arrival_events(spark, sf_dir)
     mid = ev.select(
         F.percentile_approx("ts", 0.5, 10000).alias("m")
     ).first()["m"]
-    _write_arrival_files(
-        spark,
-        base,
-        indir,
-        [ev.filter(F.col("ts") < mid), ev.filter(F.col("ts") >= mid)],
+    src = _arrival_stream(
+        spark, run_dir, [ev.filter(F.col("ts") < mid), ev.filter(F.col("ts") >= mid)]
     )
-
-    store = ParquetBucketStore(spark, os.path.join(base, "store"))
+    store = ParquetBucketStore(spark, os.path.join(run_dir, "store"))
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
     def merge_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1150,17 +1063,7 @@ def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )  # upsert contract: key-unique updates
         upsert_into(store, latest, keys=["user_id"])
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    q = (
-        src.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
+    _run_stream(spark, src, run_dir, sink=merge_batch)
     return store.read_all().select(
         "user_id",
         "event_id",
@@ -1224,7 +1127,6 @@ def run_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same arrival fixtures: identical exactly-once result, gated
     instead of crashed.
     """
-    from ..sources.readers import read_table
     from ..vendor import provision_protobuf_for_session
 
     protobuf_ok = provision_protobuf_for_session(spark)
@@ -1232,40 +1134,33 @@ def run_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = _stream_session(
         spark, _events_bytes(sf_dir), floor=STREAM_FLOOR_PYTHON_STATE
     )
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
+    run_dir = scratch_dir("tws_dedup")
+    ev = _arrival_events(spark, sf_dir)
     # batch 2 = the at-least-once replay (every tenth event redelivered)
-    _write_arrival_files(
-        spark, base, indir, [ev, ev.filter(F.col("event_id") % 10 == 0)]
-    )
+    src = _arrival_stream(spark, run_dir, [ev, ev.filter(F.col("event_id") % 10 == 0)])
 
     if protobuf_ok:
         try:
-            return _tws_dedup_state_api(spark, ev, base, indir)
+            return _ts_as_string(_tws_dedup_state_api(spark, src, run_dir))
         except Exception as exc:  # gated fallback, not a crash (VERDICT r16)
-            if "TransformWithStateInPySpark" not in f"{type(exc).__name__}: {exc}":
+            msg = f"{type(exc).__name__}: {exc}"
+            if "TransformWithStateInPySpark" not in msg or not (
+                "exited unexpectedly" in msg or "google.protobuf" in msg
+            ):
                 raise
             warnings.warn(
                 "transformWithStateInPandas state-server workers could not "
                 "run (google.protobuf unreachable in the worker env); "
                 "falling back to streaming dropDuplicates — same "
-                "exactly-once result",
+                f"exactly-once result. Original error: {msg}",
                 RuntimeWarning,
                 stacklevel=2,
             )
-    return _tws_dedup_fallback(spark, ev, base, indir)
+    return _ts_as_string(_tws_dedup_fallback(spark, src))
 
 
 def _tws_dedup_state_api(
-    spark: SparkSession, ev: DataFrame, base: str, indir: str
+    spark: SparkSession, src: DataFrame, run_dir: str
 ) -> DataFrame:
     import pandas as pd  # noqa: F401 - the processor's frames are pandas
 
@@ -1303,80 +1198,30 @@ def _tws_dedup_state_api(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     deduped = src.groupBy("user_id").transformWithStateInPandas(
         DedupProcessor(),
-        outputStructType="event_id long, user_id long, ts timestamp, value double",
+        outputStructType=ARRIVAL_DDL,
         outputMode="append",
         timeMode="none",
     )
     # Production sink shape (round 11): deduped rows are DATA-proportional
     # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
-    sink = os.path.join(base, "sink")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
-    )
+    return _run_stream(spark, deduped, run_dir, sink=ARRIVAL_DDL)
 
 
-def _tws_dedup_fallback(
-    spark: SparkSession, ev: DataFrame, base: str, indir: str
-) -> DataFrame:
+def _tws_dedup_fallback(spark: SparkSession, src: DataFrame) -> DataFrame:
     """Gated path when the TWS state server cannot run: Spark's own
     streaming ``dropDuplicates`` over the SAME arrival fixtures. event_id is
     globally unique, so per-stream dedup on it equals the per-user ListState
-    dedup exactly (same exactly-once contract, same rows). Fresh sink +
-    checkpoint dirs — the TWS attempt may have part-committed its own."""
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
+    dedup exactly (same exactly-once contract, same rows). Its own run
+    directory — fresh sink + checkpoint, since the TWS attempt may have
+    part-committed its own — whose basename names the query
+    ``tws_dedup_fallback_<hex>``, so PROGRESS_SINK records which path ran."""
     deduped = src.dropDuplicates(["event_id"]).select(
         "event_id", "user_id", "ts", "value"
     )
-    sink = os.path.join(base, "sink_fb")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck_fb"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
+    return _run_stream(
+        spark, deduped, scratch_dir("tws_dedup_fallback"), sink=ARRIVAL_DDL
     )
 
 
@@ -1393,8 +1238,6 @@ def run_sliding_agg_availablenow(
     bounded; at real cardinality the append-mode foreachBatch form keeps
     emission executor-side."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     agg = (
         clean_event_stream(read_events_stream(spark, sf_dir))
         .withWatermark("event_time", "10 minutes")
@@ -1412,21 +1255,10 @@ def run_sliding_agg_availablenow(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return spark.table(name)
+    return _run_stream(spark, agg, scratch_dir("sliding"), mode="complete")
 
 
-def run_session_agg_availablenow(
-    spark: SparkSession, sf_dir: str, gap: str = "30 minutes"
-) -> DataFrame:
+def run_session_agg_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SESSION-window aggregate: ``session_window`` merges
     per-user events whose inactivity gap is under 30 minutes — the state
     store keeps one open session per user and MERGES sessions that a
@@ -1436,11 +1268,9 @@ def run_session_agg_availablenow(
     sink exactly the batch sessionization, which is what the oracle
     hash-checks — a dropped merge or split session breaks it."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"session_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     agg = (
         clean_event_stream(read_events_stream(spark, sf_dir))
-        .groupBy(F.session_window("event_time", gap), F.col("user_id"))
+        .groupBy(F.session_window("event_time", "30 minutes"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.avg("value"), 6).alias("avg_value"),
@@ -1454,21 +1284,10 @@ def run_session_agg_availablenow(
     # replace the whole result per trigger — foreachBatch + whole-directory
     # overwrite is that sink at scale (a memory sink is the same semantics
     # materialized on the DRIVER, capping the runner at driver heap).
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(path)
-
-    q = (
-        agg.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
+    return _run_stream(
         spark,
-        path,
-        "user_id long, session_start string, n_events long, avg_value double",
+        agg,
+        scratch_dir("session"),
+        mode="complete",
+        sink="user_id long, session_start string, n_events long, avg_value double",
     )

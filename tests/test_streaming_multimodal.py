@@ -219,7 +219,8 @@ def test_stream_budget_exhaustion_raises_not_partial(spark, sf_dir, monkeypatch)
     """A query still running when the completion budget expires must raise,
     never hand the caller a partial sink table (found at the sf100 tier:
     `stream_stateful_stats` silently returned 0 of 5 rows when 100M events
-    outran the old unchecked awaitTermination(300))."""
+    outran the old unchecked awaitTermination(300)). The paced arrival-file
+    runners (here the foreachBatch upsert) wait on the same budget."""
     import pytest
 
     from mini_project_big_data_analysis_spark.streaming import pipeline
@@ -227,5 +228,9 @@ def test_stream_budget_exhaustion_raises_not_partial(spark, sf_dir, monkeypatch)
     # 50 ms: enough for awaitTermination's seconds→ms conversion to stay
     # positive, far below any real availableNow run on the fixture
     monkeypatch.setattr(pipeline, "STREAM_BUDGET_S", 0.05)
-    with pytest.raises(TimeoutError, match="SPARK_GRAFT_STREAM_BUDGET_S"):
-        pipeline.run_tumbling_agg_availablenow(spark, sf_dir)
+    for runner in (
+        pipeline.run_tumbling_agg_availablenow,
+        pipeline.run_foreachbatch_upsert,
+    ):
+        with pytest.raises(TimeoutError, match="SPARK_GRAFT_STREAM_BUDGET_S"):
+            runner(spark, sf_dir)

@@ -76,3 +76,36 @@ def test_tws_unrelated_error_propagates(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(pipeline, "_tws_dedup_state_api", boom)
     with pytest.raises(ValueError, match="unrelated failure"):
         pipeline.run_tws_dedup(spark, sf_dir)
+
+
+def test_tws_error_without_crash_signature_propagates(spark, sf_dir, monkeypatch):
+    """Naming the TWS operator is not enough: an error from it that lacks
+    the worker-crash signature (``exited unexpectedly`` / ``google.protobuf``)
+    is a real state-api failure and must surface, not fall back."""
+
+    def boom(*a, **k):
+        raise RuntimeError(
+            "Query terminated with exception: TransformWithStateInPySpark "
+            "state schema mismatch for column 'seen'"
+        )
+
+    monkeypatch.setattr(pipeline, "_tws_dedup_state_api", boom)
+    with pytest.raises(RuntimeError, match="state schema mismatch"):
+        pipeline.run_tws_dedup(spark, sf_dir)
+
+
+def test_tws_fallback_records_which_path_ran(spark, sf_dir, monkeypatch):
+    """The forced-crash run warns with the original error text and leaves a
+    PROGRESS_SINK record named after the fallback query."""
+
+    def boom(*a, **k):
+        raise RuntimeError(
+            "TransformWithStateInPySpark: No module named 'google.protobuf'"
+        )
+
+    monkeypatch.setattr(pipeline, "_tws_dedup_state_api", boom)
+    monkeypatch.setattr(pipeline, "PROGRESS_SINK", [])
+    with pytest.warns(RuntimeWarning, match="No module named 'google.protobuf'"):
+        pipeline.run_tws_dedup(spark, sf_dir)
+    names = [rec["name"] for rec in pipeline.PROGRESS_SINK]
+    assert len(names) == 1 and names[0].startswith("tws_dedup_fallback_")
