@@ -3,6 +3,10 @@ DuckDB oracle at the given scale factor and report pass/fail per id.
 
 Usage: python scripts/check_queries.py [sf_dir] [query_id ...]
 
+Each PASS/FAIL line carries `compiles=N`, the classes Janino compiled while
+the id ran (`session.compiled_classes`); the summary line carries their sum.
+A warm rerun of an id should compile 0.
+
 `--eps X` (anywhere in argv) relaxes the value compare to ±X on float
 columns AFTER the exact hash compare fails — the hash compare stays the
 primary verdict; eps exists to measure whether a mismatch is a 6dp
@@ -28,7 +32,10 @@ sys.path.insert(0, ".")
 from tests.oracle import compare, duck_connection  # noqa: E402
 
 from mini_project_big_data_analysis_spark.queries import all_queries  # noqa: E402
-from mini_project_big_data_analysis_spark.session import get_spark  # noqa: E402
+from mini_project_big_data_analysis_spark.session import (  # noqa: E402
+    compiled_classes,
+    get_spark,
+)
 
 
 def main() -> int:
@@ -96,10 +103,11 @@ def main() -> int:
     if duck_mem is not None:
         con.execute(f"SET memory_limit={quote_literal(duck_mem)}")
     failures = []
+    total_compiles = 0
     for qid, q in sorted(all_queries().items()):
         if only and qid not in only:
             continue
-        t0 = time.time()
+        t0, c0 = time.time(), compiled_classes(spark)
         try:
             df = q.fn(spark, sf_dir)
             if q.oracle is None:
@@ -109,11 +117,13 @@ def main() -> int:
                 status, msg = compare(df, con, q.oracle, eps=eps)
         except Exception:
             status, msg = False, traceback.format_exc(limit=25)
-        dt = time.time() - t0
-        print(f"{'PASS' if status else 'FAIL'} {qid:36s} {dt:6.1f}s  {msg}")
+        dt, compiles = time.time() - t0, compiled_classes(spark) - c0
+        total_compiles += compiles
+        print(f"{'PASS' if status else 'FAIL'} {qid:36s} {dt:6.1f}s  compiles={compiles}  {msg}")
         if not status:
             failures.append(qid)
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nall green")
+    verdict = f"{len(failures)} failures: {failures}" if failures else "all green"
+    print(f"\n{verdict}  compiles={total_compiles}")
     return 1 if failures else 0
 
 
