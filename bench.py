@@ -7,7 +7,10 @@ and print ONE JSON line:
 
 Timing protocol (BASELINE.md, scripts/bench_baseline.py): per measured id,
 one WARM run (discarded), then best-of-2 timed runs to a noop sink (measures
-compute + shuffle, not driver collect). The discarded warm run is what makes
+compute + shuffle, not driver collect), each through record.run_query; the
+full tier's kept draw per id lands in BENCH_FULL.json "records" (phase
+times, job/stage counters, compiled classes, streaming summary). The
+discarded warm run is what makes
 the recorded number comparable to BASELINE.md's warm-median rows: the first
 execution of an id pays Python-worker pool spin-up, Arrow serializer init,
 and codegen for plans the JVM warm-up never touched — round 5 measured the
@@ -48,7 +51,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 
 def baseline_rows() -> dict[str, float]:
@@ -77,6 +79,7 @@ def main() -> int:
         sf_num = None
 
     from mini_project_big_data_analysis_spark.queries import all_queries
+    from mini_project_big_data_analysis_spark.record import run_query
     from mini_project_big_data_analysis_spark.session import get_spark
 
     spark = get_spark(app_name="mpbda-bench")
@@ -119,20 +122,13 @@ def main() -> int:
     ]
     registry = all_queries()
 
-    def run_once(qid: str) -> float:
-        # Per-query isolation: reclaim the previous query's dead blocks /
-        # Arrow buffers BEFORE the clock starts. Without this, garbage from
-        # a pandas-UDF-heavy query inflates the next 2-3 entries 3-7×
-        # (measured; the number then charges query N with query N-1's GC).
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.time()
-        df = registry[qid].fn(spark, sf_dir)
-        df.write.mode("overwrite").format("noop").save()
-        return time.time() - t0
+    def best_of(qid: str, n: int) -> dict:
+        # record.run_query GCs before its clock starts (per-query isolation)
+        return min((run_query(spark, qid, sf_dir) for _ in range(n)), key=lambda r: r["wall_s"])
 
     # JVM warm-up, result discarded: one cheap query to initialize the
     # session, scans, and codegen machinery before any clock starts.
-    run_once("agg_global_stats")
+    run_query(spark, "agg_global_stats", sf_dir)
 
     # Per-id protocol = scripts/bench_baseline.py's: warm run (discarded),
     # then best-of-2 timed. Round 5 proved that ONLY warming the JVM is not
@@ -150,9 +146,8 @@ def main() -> int:
     for qid in headline:
         if qid not in registry:
             continue
-        run_once(qid)  # warm (discarded)
-        best = min(run_once(qid) for _ in range(3))
-        timings[qid] = round(best, 3)
+        run_query(spark, qid, sf_dir)  # warm (discarded)
+        timings[qid] = round(best_of(qid, 3)["wall_s"], 3)
         print(f"# {qid}: {timings[qid]:.3f}s", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
@@ -172,11 +167,13 @@ def main() -> int:
     guard = baseline_rows() if sf_num == 0.1 else {}
     guard_retries: dict[str, dict[str, float]] = {}
     timings_full: dict[str, float] = {}
+    records: dict[str, dict] = {}
     full_errors: dict[str, str] = {}
     for qid in registry:
         try:
-            run_once(qid)  # warm (discarded)
-            timings_full[qid] = round(min(run_once(qid) for _ in range(2)), 3)
+            run_query(spark, qid, sf_dir)  # warm (discarded)
+            rec = best_of(qid, 2)
+            timings_full[qid] = round(rec["wall_s"], 3)
             row = guard.get(qid)
             if row and timings_full[qid] > 2 * row:
                 # over the regression guard on 2 draws: 2 more draws to
@@ -187,7 +184,8 @@ def main() -> int:
                 # under on one lucky draw stays visible to
                 # classify_bench's isolated-median audit (ADVICE r15).
                 first = timings_full[qid]
-                draws = sorted([first, *(run_once(qid) for _ in range(2))])
+                retry = [run_query(spark, qid, sf_dir) for _ in range(2)]
+                draws = sorted([first, *(r["wall_s"] for r in retry)])
                 best = round(draws[0], 3)
                 med = round(draws[1], 3)  # median of the 3 available values
                 guard_retries[qid] = {
@@ -196,11 +194,13 @@ def main() -> int:
                     "median_of_3": med,
                 }
                 timings_full[qid] = best
+                rec = min([rec, *retry], key=lambda r: r["wall_s"])
                 print(
                     f"## guard-retry {qid}: {first} -> {best} (median {med},"
                     f" 2x row = {2 * row:.3f})",
                     file=sys.stderr,
                 )
+            records[qid] = rec
         except Exception as exc:  # pragma: no cover - defensive
             full_errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
         print(f"## full {qid}: {timings_full.get(qid, 'ERR')}", file=sys.stderr)
@@ -220,6 +220,7 @@ def main() -> int:
         "queries": timings_full,
         "errors": full_errors,
         "guard_retries": guard_retries,
+        "records": records,
         "sf": sf_num,
         **run_env,
     }

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
@@ -88,9 +89,13 @@ def _events_scan(spark: SparkSession, path: str):
         try:
             raw = spark.read.parquet(path)
             schema = raw.schema
-        except Exception:
-            # Legacy reader refuses INT64(TIMESTAMP(NANOS)) outright: fall
-            # back to the nanos-as-long escape hatch and retry.
+        except AnalysisException as exc:
+            # A reader that refuses INT64(TIMESTAMP(NANOS)) outright: fall
+            # back to the nanos-as-long escape hatch and retry. Any other
+            # error (a missing path, say) propagates with the session conf
+            # untouched.
+            if exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
+                raise
             spark.conf.set(_NANOS_CONF, "true")
             raw = spark.read.parquet(path)
             schema = raw.schema

@@ -88,9 +88,10 @@ STREAM_BUDGET_S = float(os.environ.get("SPARK_GRAFT_STREAM_BUDGET_S", "300"))
 
 #: When a list, every completed streaming run appends one record per query
 #: here: ``{"query_id", "name", "progress"}``, the last being the
-#: per-micro-batch progress (scripts/audit_stream_state.py sets it to
-#: collect state-operator metrics — rows in state, watermark evictions,
-#: state memory — without touching the pipelines themselves). ``name`` says
+#: per-micro-batch progress (``record.run_query`` sets it for each run it
+#: records and summarizes it into the record's ``stream`` — rows in state,
+#: watermark evictions, state memory — without touching the pipelines
+#: themselves; the state audit reads that summary). ``name`` says
 #: which path ran (e.g. ``tws_dedup_<hex>`` or ``tws_dedup_fallback_<hex>``).
 #: None (the default) is free: production runs never pay for collection.
 #: NOTE: ``q.recentProgress`` retains only the LAST

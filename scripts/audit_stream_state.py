@@ -1,17 +1,19 @@
 """Streaming state-plane audit: what each stateful query actually keeps.
 
 The batch shuffle plane is measured by scripts/audit_shuffle.py; this is
-its streaming twin. Every availableNow runner in streaming/pipeline.py
-reports per-micro-batch progress through ``pipeline.PROGRESS_SINK`` (a
-pure observation hook — None in production), and this script summarizes
-the state-operator metrics per registered stream id:
+its streaming twin. Every registered stream id runs through
+``record.run_query`` (action: ``count()`` of the sink read-back), whose
+record carries one summary of the run's per-micro-batch progress
+(``pipeline.PROGRESS_SINK``):
 
-    batches      micro-batches executed (paced ids run >1)
-    input_rows   rows delivered across all batches
-    peak_state   max over batches of total rows held in state
-    end_state    rows still in state at termination
-    evicted      rows dropped by watermark across the run
-    peak_mem     max state-store memory used (bytes)
+    batches       micro-batches executed (paced ids run >1)
+    input_rows    rows delivered across all batches
+    peak_state    max over batches of total rows held in state
+    end_state     rows still in state at termination
+    late_dropped  late input rows the watermark dropped across the run
+    removed       state rows the watermark expired across the run
+    peak_mem      max state-store memory used (bytes)
+    names         the streaming query names (TWS path vs fallback)
 
 The 100 TB claims this pins: dedup state holds ONE entry per key under a
 double delivery (peak_state == distinct keys, not 2×); watermarks actually
@@ -20,7 +22,7 @@ window-grain state (peak_state ≈ windows, orders of magnitude below
 input_rows); and the round-11 stateful_stats re-plan keeps NOTHING in
 keyed state (map-side combine — no state operator at all).
 
-Usage: python scripts/audit_stream_state.py [sf_dir] [qid ...]
+Usage: python scripts/audit_stream_state.py [--stream-budget SECONDS] [sf_dir] [qid ...]
 Prints a markdown table and ONE JSON line {qid: {...}}.
 """
 
@@ -32,60 +34,20 @@ import sys
 sys.path.insert(0, ".")
 
 from mini_project_big_data_analysis_spark.queries import all_queries  # noqa: E402
+from mini_project_big_data_analysis_spark.record import (  # noqa: E402
+    run_query,
+    take_stream_budget,
+)
 from mini_project_big_data_analysis_spark.session import get_spark  # noqa: E402
-from mini_project_big_data_analysis_spark.streaming import pipeline  # noqa: E402
 
-
-def summarize(captured: list[dict]) -> dict[str, int]:
-    batches = input_rows = peak_state = end_state = evicted = removed = peak_mem = 0
-    for qrec in captured:
-        prog = qrec["progress"]
-        batches += len(prog)
-        input_rows += sum(int(p.get("numInputRows", 0)) for p in prog)
-        for p in prog:
-            ops = p.get("stateOperators") or []
-            rows = sum(int(o.get("numRowsTotal", 0)) for o in ops)
-            mem = sum(int(o.get("memoryUsedBytes", 0)) for o in ops)
-            peak_state = max(peak_state, rows)
-            peak_mem = max(peak_mem, mem)
-            # late INPUT rows dropped at the operator vs STATE entries the
-            # watermark expired — different mechanisms, both reported
-            evicted += sum(int(o.get("numRowsDroppedByWatermark", 0)) for o in ops)
-            removed += sum(int(o.get("numRowsRemoved", 0)) for o in ops)
-        if prog:
-            last_ops = prog[-1].get("stateOperators") or []
-            end_state = max(
-                end_state, sum(int(o.get("numRowsTotal", 0)) for o in last_ops)
-            )
-    return {
-        "batches": batches,
-        "input_rows": input_rows,
-        "peak_state": peak_state,
-        "end_state": end_state,
-        "evicted": evicted,
-        "removed": removed,
-        "peak_mem": peak_mem,
-        "queries": len(captured),
-    }
+USAGE = "usage: python scripts/audit_stream_state.py [--stream-budget SECONDS] [sf_dir] [qid ...]"
 
 
 def main() -> int:
     argv = sys.argv[1:]
-    if "--stream-budget" in argv:
-        # same plumbing as check_queries/scaling_sweep: a large-fixture
-        # audit must be able to raise the 300 s availableNow budget
-        # (the sf100 sweep ran at 1800 s)
-        i = argv.index("--stream-budget")
-        if i + 1 >= len(argv):
-            raise SystemExit("usage: --stream-budget SECONDS (value missing)")
-        try:
-            budget = float(argv[i + 1])
-        except ValueError:
-            raise SystemExit(
-                f"usage: --stream-budget SECONDS (got {argv[i + 1]!r})"
-            ) from None
-        del argv[i : i + 2]
-        pipeline.STREAM_BUDGET_S = budget
+    # a large-fixture audit must be able to raise the 300 s availableNow
+    # budget (the sf100 sweep ran at 1800 s)
+    take_stream_budget(argv, USAGE)
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = argv[1:]
     spark = get_spark(app_name="mpbda-stream-state-audit")
@@ -93,31 +55,19 @@ def main() -> int:
     # recentProgress retains only the last numRecentProgressUpdates
     # (default 100) records per query; availableNow plans ~one micro-batch
     # per source file, so a large fixture would silently under-count
-    # input_rows/peak_state/evicted right when the sweep matters most
+    # input_rows/peak_state/late_dropped right when the sweep matters most
     # (ADVICE r13 medium). Raise the cap far above any fixture's file
     # count; pipeline._capture_progress additionally fails loudly if a
     # capture ever lands at the cap.
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
     registry = all_queries()
     ids = only or [q for q in sorted(registry) if q.startswith("stream_")]
-    out: dict[str, dict[str, int]] = {}
+    out: dict[str, dict] = {}
     for qid in ids:
-        pipeline.PROGRESS_SINK = []
-        try:
-            # count() materializes the sink read-back; the streaming work
-            # itself already ran inside fn()
-            registry[qid].fn(spark, sf_dir).count()
-            out[qid] = summarize(pipeline.PROGRESS_SINK)
-        finally:
-            pipeline.PROGRESS_SINK = None
-        r = out[qid]
-        print(
-            f"# {qid}: batches={r['batches']} input={r['input_rows']:,} "
-            f"peak_state={r['peak_state']:,} end={r['end_state']:,} "
-            f"late_dropped={r['evicted']:,} state_removed={r['removed']:,} "
-            f"peak_mem={r['peak_mem']:,}",
-            file=sys.stderr,
-        )
+        # count() materializes the sink read-back; the streaming work
+        # itself already ran inside the query function
+        out[qid] = run_query(spark, qid, sf_dir, action=lambda df: df.count())["stream"]
+        print(f"# {qid}: {out[qid]}", file=sys.stderr)
     print(
         "| query id | batches | input rows | peak state rows | end state "
         "| late dropped | state removed | peak state mem |"
@@ -126,7 +76,7 @@ def main() -> int:
     for qid, r in out.items():
         print(
             f"| {qid} | {r['batches']} | {r['input_rows']:,} | {r['peak_state']:,} "
-            f"| {r['end_state']:,} | {r['evicted']:,} | {r['removed']:,} "
+            f"| {r['end_state']:,} | {r['late_dropped']:,} | {r['removed']:,} "
             f"| {r['peak_mem']:,} |"
         )
     print(json.dumps(out))

@@ -1,5 +1,6 @@
 """Fill BASELINE.md: time every oracle-checked query in DuckDB and in Spark
-at a given SF, median of 3 warm runs, and print a markdown table.
+at a given SF, median of 3 warm runs, and print a markdown table. The Spark
+side runs each id through ``record.run_query`` (GC, then noop sink).
 
 Usage: python scripts/bench_baseline.py [sf_dir] [query_id ...]
 """
@@ -15,6 +16,7 @@ sys.path.insert(0, ".")
 from tests.oracle import duck_connection  # noqa: E402
 
 from mini_project_big_data_analysis_spark.queries import all_queries  # noqa: E402
+from mini_project_big_data_analysis_spark.record import run_query  # noqa: E402
 from mini_project_big_data_analysis_spark.session import get_spark  # noqa: E402
 
 
@@ -39,17 +41,10 @@ def main() -> int:
             con.sql(sql).fetchall()
             return time.time() - t0
 
-        def spark_run(fn=q.fn):
-            # same per-query GC isolation as bench.py (see note there)
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            return time.time() - t0
-
         # rows-only ids (oracle=None) get a Spark-side baseline row too —
         # the 2× regression guard must cover every registered id.
         d = median3(duck_run) if q.oracle is not None else None
-        s = median3(spark_run)
+        s = median3(lambda: run_query(spark, qid, sf_dir)["wall_s"])
         # release any cache a query leaves behind so pinned blocks don't
         # distort the remaining entries
         spark.catalog.clearCache()

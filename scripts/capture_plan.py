@@ -4,14 +4,14 @@ Usage: python scripts/capture_plan.py SF_DIR TAG QID [QID ...]
 
 Writes plans/r17/<qid>_<tag>.txt in the round-16 capture format: a header
 line with the warm best-of-2 noop timing, then the formatted physical plan.
-One session for all ids (same protocol as bench.py's full tier).
+One session for all ids, each run through ``record.run_query`` (same
+protocol as bench.py's full tier).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 
 USAGE = "usage: python scripts/capture_plan.py SF_DIR TAG QID [QID ...]"
@@ -23,6 +23,7 @@ def main() -> int:
         return 2
     sf_dir, tag, *qids = sys.argv[1:]
     from mini_project_big_data_analysis_spark.queries import all_queries
+    from mini_project_big_data_analysis_spark.record import run_query
 
     registry = all_queries()
     unknown = [q for q in qids if q not in registry]
@@ -36,19 +37,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
     os.makedirs(outdir, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     for qid in qids:
-        spark.sparkContext.setJobDescription(f"capture {qid}")
-
-        def run_once() -> float:
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            df = registry[qid].fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            return time.time() - t0
-
-        run_once()  # warm, discarded
-        draws = [run_once() for _ in range(2)]
+        run_query(spark, qid, sf_dir)  # warm, discarded
+        draws = [run_query(spark, qid, sf_dir)["wall_s"] for _ in range(2)]
         best = min(draws)
         df = registry[qid].fn(spark, sf_dir)
         explained = df._jdf.queryExecution().explainString(
@@ -58,7 +49,7 @@ def main() -> int:
         with open(path, "w") as f:
             f.write(
                 f"# {qid} [{tag}] — warm noop-sink best-of-2: {best:.3f}s "
-                f"(draws {[f'{d:.3f}' for d in draws]}) @ {sf_dir} local[{cpus}]\n\n"
+                f"(draws {[f'{d:.3f}' for d in draws]}) @ {sf_dir} {spark.sparkContext.master}\n\n"
             )
             f.write(explained)
         print(f"{qid} [{tag}]: {best:.3f}s -> {path}", file=sys.stderr)

@@ -3,9 +3,14 @@ DuckDB oracle at the given scale factor and report pass/fail per id.
 
 Usage: python scripts/check_queries.py [sf_dir] [query_id ...]
 
-Each PASS/FAIL line carries `compiles=N`, the classes Janino compiled while
-the id ran (`session.compiled_classes`); the summary line carries their sum.
-A warm rerun of an id should compile 0.
+`--stream-budget SECONDS` raises the 300 s availableNow budget of the
+streaming ids for a large-fixture run.
+
+Each id runs through `record.run_query` with the oracle compare as its
+action, so the time on each PASS/FAIL line is the record's `wall_s` (query
+function + compare) and `compiles=N` is the classes Janino compiled while
+the id ran (`?` when the id raised); the summary line carries their sum. A
+warm rerun of an id should compile 0.
 
 `--eps X` (anywhere in argv) relaxes the value compare to ±X on float
 columns AFTER the exact hash compare fails — the hash compare stays the
@@ -24,7 +29,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 import traceback
 
 sys.path.insert(0, ".")
@@ -32,10 +36,11 @@ sys.path.insert(0, ".")
 from tests.oracle import compare, duck_connection  # noqa: E402
 
 from mini_project_big_data_analysis_spark.queries import all_queries  # noqa: E402
-from mini_project_big_data_analysis_spark.session import (  # noqa: E402
-    compiled_classes,
-    get_spark,
+from mini_project_big_data_analysis_spark.record import (  # noqa: E402
+    run_query,
+    take_stream_budget,
 )
+from mini_project_big_data_analysis_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -55,16 +60,9 @@ def main() -> int:
     duck_temp = flag("--duck-temp", str)
     duck_temp_size = flag("--duck-temp-size", str)
     duck_mem = flag("--duck-mem", str)
-    stream_budget = flag("--stream-budget", float)
-    if stream_budget is not None:
-        # STREAM_BUDGET_S was bound when the queries package imported the
-        # streaming pipeline above, so set BOTH the env (any late import /
-        # child utility) and the live module value — a large-fixture tier
-        # run must not die halfway on the 300 s dev default (VERDICT r11).
-        os.environ["SPARK_GRAFT_STREAM_BUDGET_S"] = str(stream_budget)
-        from mini_project_big_data_analysis_spark.streaming import pipeline
-
-        pipeline.STREAM_BUDGET_S = stream_budget
+    # a large-fixture tier run must not die halfway on the 300 s dev
+    # default (VERDICT r11)
+    take_stream_budget(argv, __doc__)
     if "--help" in argv or "-h" in argv:
         print(__doc__)
         return 0
@@ -102,24 +100,26 @@ def main() -> int:
         con.execute(f"SET max_temp_directory_size={quote_literal(duck_temp_size)}")
     if duck_mem is not None:
         con.execute(f"SET memory_limit={quote_literal(duck_mem)}")
+
+    def check(df, oracle):
+        if oracle is None:
+            return True, f"rows-only: {df.count()} rows"
+        return compare(df, con, oracle, eps=eps)
+
     failures = []
     total_compiles = 0
     for qid, q in sorted(all_queries().items()):
         if only and qid not in only:
             continue
-        t0, c0 = time.time(), compiled_classes(spark)
         try:
-            df = q.fn(spark, sf_dir)
-            if q.oracle is None:
-                n = df.count()
-                status, msg = n >= 0, f"rows-only: {n} rows"
-            else:
-                status, msg = compare(df, con, q.oracle, eps=eps)
+            rec = run_query(spark, qid, sf_dir, action=lambda df: check(df, q.oracle))
+            (status, msg), compiles = rec["result"], rec["compiles"]
+            timing = f"{rec['wall_s']:6.1f}s  compiles={compiles}"
+            total_compiles += compiles
         except Exception:
             status, msg = False, traceback.format_exc(limit=25)
-        dt, compiles = time.time() - t0, compiled_classes(spark) - c0
-        total_compiles += compiles
-        print(f"{'PASS' if status else 'FAIL'} {qid:36s} {dt:6.1f}s  compiles={compiles}  {msg}")
+            timing = "     -   compiles=?"
+        print(f"{'PASS' if status else 'FAIL'} {qid:36s} {timing}  {msg}")
         if not status:
             failures.append(qid)
     verdict = f"{len(failures)} failures: {failures}" if failures else "all green"

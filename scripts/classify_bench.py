@@ -38,14 +38,9 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-
-def baseline_rows() -> dict[str, float]:
-    text = open(os.path.join(ROOT, "BASELINE.md")).read()
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(r"\| `(\w+)` \| [\d.]+ \| ([\d.]+) \|", text)
-    }
+from bench import baseline_rows  # noqa: E402
 
 
 def tier_timings(path: str) -> dict[str, float]:

@@ -62,6 +62,7 @@ def build_empty_fixture(out_dir: str | None = None) -> str:
 
 def main(argv: list[str]) -> int:
     from mini_project_big_data_analysis_spark.queries import all_queries
+    from mini_project_big_data_analysis_spark.record import run_query
     from mini_project_big_data_analysis_spark.session import get_spark
 
     spark = get_spark()
@@ -75,9 +76,9 @@ def main(argv: list[str]) -> int:
             print(f"?? unknown id {qid}", flush=True)
             continue
         try:
-            df = registry[qid].fn(spark, EMPTY_DIR)
-            n = df.count()
-            _ = df.schema  # schema must be derivable
+            # the schema must be derivable and the plan must run
+            rec = run_query(spark, qid, EMPTY_DIR, action=lambda df: (df.schema, df.count()))
+            _, n = rec["result"]
             print(f"ok  {qid} rows={n} [{i + 1}/{len(ids)}]", flush=True)
         except Exception as exc:  # noqa: BLE001 - sweep reports, caller fixes
             short = traceback.format_exception_only(type(exc), exc)[-1].strip()

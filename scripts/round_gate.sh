@@ -12,6 +12,9 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 # bare `python` is absent on some hosts; honor $PYTHON, fall back to
 # whichever of python/python3 exists (ADVICE r14 low)
 PY="${PYTHON:-$(command -v python >/dev/null 2>&1 && echo python || echo python3)}"
+# one Spark core per host CPU unless the caller says otherwise, as in the
+# tier-1 test command (session.get_spark would otherwise build local[32])
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 
 echo "== 1/4 pytest =="
 "$PY" -m pytest tests/ -x -q

@@ -79,3 +79,31 @@ def test_capture_plan_bad_args_never_start_a_session(monkeypatch, capsys, args):
     monkeypatch.setattr("sys.argv", ["capture_plan.py", *args])
     assert capture_plan.main() != 0
     assert capture_plan.USAGE in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "args",
+    [
+        [],
+        ["sf"],
+        ["--stream-budget"],
+        ["sf", "agg_describe", "--stream-budget"],
+        ["--stream-budget", "soon", "sf", "agg_describe"],
+        ["sf", "no_such_query"],
+    ],
+)
+def test_scaling_sweep_bad_args_never_start_a_session(monkeypatch, capsys, args):
+    from mini_project_big_data_analysis_spark import session
+    from scripts import scaling_sweep
+
+    def no_session(*a, **k):
+        raise AssertionError("get_spark called for bad arguments")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr("sys.argv", ["scaling_sweep.py", *args])
+    try:
+        code = scaling_sweep.main()
+    except SystemExit as exc:  # the shared --stream-budget parser exits itself
+        code = exc.code
+    assert code == 2
+    assert scaling_sweep.USAGE in capsys.readouterr().err

@@ -1,18 +1,17 @@
 """Shuffle-plane pins: the bytes each representative operator moves per
 scanned row, measured (not argued from plan shape).
 
-scripts/audit_shuffle.py runs each id to a noop sink in a UI-enabled
-session and diffs completed-stage metrics from the status REST API. The
-100 TB posture of the dedup/text/aggregate tiers is that the shuffle
-carries fixed-width digests and partial aggregates — a small CONSTANT
-number of bytes per scanned row, independent of document payload size —
-so one subprocess audit at sf0.01 pins that constant with ~3× headroom
+scripts/audit_shuffle.py runs each id to a noop sink through
+``record.run_query``, whose record sums the stage metrics of the jobs the
+run started (driver status store, UI off). The 100 TB posture of the
+dedup/text/aggregate tiers is that the shuffle carries fixed-width digests
+and partial aggregates — a small CONSTANT number of bytes per scanned row,
+independent of document payload size — so one subprocess audit at sf0.01 pins that constant with ~3× headroom
 over the measured value (SCALING.md round-12 section records the
 measured full-catalog table and the sf0.01→sf0.1 flatness check).
 
-The audit needs its own UI-enabled JVM (the shared test session has
-spark.ui.enabled=false, which is not runtime-mutable), hence the
-subprocess.
+The audit still runs as a subprocess, end to end through the script and in
+a JVM of its own; it no longer needs a UI.
 """
 
 from __future__ import annotations
@@ -85,10 +84,10 @@ def test_no_spill_at_gate_scale(audit_result):
 # rep-collapse amortizes it — still digest-grain (the join itself runs over
 # ONE representative row per distinct simhash; the 2.8e9-pair sf100
 # expansion is pinned closed-form in test_sf100_invariants). The two pins
-# below make a regression PAST digest grain fail loudly without the REST
-# audit: (a) the optimized plan must collapse to reps (Aggregate) on BOTH
-# sides BELOW the bucket join — losing that turns the join into depth²
-# candidate work; (b) on a depth-stress corpus the expanded output must
+# below make a regression PAST digest grain fail loudly without the
+# subprocess audit: (a) the optimized plan must collapse to reps (Aggregate)
+# on BOTH sides BELOW the bucket join — losing that turns the join into
+# depth² candidate work; (b) on a depth-stress corpus the expanded output must
 # match the closed form derived from the 40 class simhashes exactly.
 # ---------------------------------------------------------------------------
 

@@ -1,8 +1,9 @@
 """State-plane pins for the streaming tier (scripts/audit_stream_state.py
 is the catalog-wide sweep; these pin the claims that must never regress).
 
-The metrics come from StreamingQueryProgress via pipeline.PROGRESS_SINK —
-an in-process observation hook, so the pins run against the shared test
+The metrics come from the streaming summary of ``record.run_query``'s
+record (StreamingQueryProgress captured through pipeline.PROGRESS_SINK, an
+in-process observation hook), so the pins run against the shared test
 session with no subprocess or UI. What each pin protects:
 
 - dedup keeps ONE state entry per key under a double delivery (peak ==
@@ -21,44 +22,21 @@ session with no subprocess or UI. What each pin protects:
 
 from __future__ import annotations
 
-from mini_project_big_data_analysis_spark.queries import all_queries
+from mini_project_big_data_analysis_spark.record import run_query
 from mini_project_big_data_analysis_spark.streaming import pipeline
 
 from conftest import SF_DIR
 
 
 def run_with_progress(spark, qid: str) -> dict[str, int]:
-    registry = all_queries()
-    pipeline.PROGRESS_SINK = []
-    try:
-        result_rows = registry[qid].fn(spark, SF_DIR).count()
-        captured = pipeline.PROGRESS_SINK
-    finally:
-        pipeline.PROGRESS_SINK = None
-    batches = peak = end = inputs = 0
-    for qrec in captured:
-        prog = qrec["progress"]
-        batches += len(prog)
-        inputs += sum(int(p.get("numInputRows", 0)) for p in prog)
-        for p in prog:
-            rows = sum(
-                int(o.get("numRowsTotal", 0)) for o in (p.get("stateOperators") or [])
-            )
-            peak = max(peak, rows)
-        if prog:
-            end = max(
-                end,
-                sum(
-                    int(o.get("numRowsTotal", 0))
-                    for o in (prog[-1].get("stateOperators") or [])
-                ),
-            )
+    rec = run_query(spark, qid, SF_DIR, action=lambda df: df.count())
+    stream = rec["stream"]
     return {
-        "batches": batches,
-        "inputs": inputs,
-        "peak": peak,
-        "end": end,
-        "result_rows": result_rows,
+        "batches": stream["batches"],
+        "inputs": stream["input_rows"],
+        "peak": stream["peak_state"],
+        "end": stream["end_state"],
+        "result_rows": rec["result"],
     }
 
 
