@@ -18,7 +18,8 @@ same ``clean_event_stream``/``tumbling_agg`` compose onto
 ``spark.readStream.format("kafka")`` unchanged.
 
 One run harness. Every runner builds only its DataFrame graph (and, for a
-parquet sink, the sink's DDL) and hands it to ``_run_stream``, which owns
+parquet sink, the sink's DDL) on its own ``_stream_session`` clone of the
+caller's session and hands it to ``_run_stream``, which owns
 everything else: the query name (the run directory's basename), the
 checkpoint at ``run_dir/ck``, ``Trigger.AvailableNow``, the completion wait
 bounded by ``STREAM_BUDGET_S``, the ``PROGRESS_SINK`` capture and the
@@ -132,54 +133,62 @@ STREAM_FLOOR_JVM_STATE = 4
 STREAM_FLOOR_PYTHON_STATE = 16
 
 
+#: The checkpoint file manager of every streaming run. Spark's default on
+#: ``file:`` is the FileContext one, whose rename goes through
+#: ``RawLocalFileSystem.getFileLinkStatus``; without native ``libhadoop``
+#: (the Hadoop client bundled with pyspark has none) that starts a
+#: ``readlink`` process twice per rename of every offset, commit, metadata
+#: and state-delta file. On a local path this manager's rename is the same
+#: check-then-``FileSystem.rename``, so it gives up no atomicity and starts
+#: no process.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def _stream_session(
     spark: SparkSession,
     est_input_bytes: int,
     floor: int = STREAM_FLOOR_JVM_STATE,
 ) -> SparkSession:
-    """A session for ONE streaming run whose ``spark.sql.shuffle.partitions``
-    (= the stateful operators' state-store partition count, recorded in the
-    checkpoint at first batch) is sized to the stream's input instead of the
-    batch default: ``ceil(est_input_bytes / STREAM_TARGET_BYTES_PER_PARTITION)``
-    clamped to ``[floor, session default]``.
+    """The session ONE streaming run starts on: an owned clone of ``spark``
+    that differs from it in two keys. Every runner builds its graph on it,
+    so nothing a run sets (``nanosAsLong``, a registered data source, a
+    memory sink's temp view) reaches the caller's session.
 
-    Why a child session: state-store partitioning is only configurable
-    through ``spark.sql.shuffle.partitions``, and set/restore on the shared
-    session would race concurrent catalog queries (tests/test_concurrency.py
-    runs them). ``newSession()`` shares the SparkContext and cache but takes
-    builder-level conf only, so the parent's *runtime* conf (UTC timezone,
-    Arrow, audit retention caps — possibly set by an external driver via
-    ``configure_existing``) is copied over first; the clone differs from the
-    parent in exactly one key. When the derived count equals the session
-    default the parent is returned unchanged (the tests' 4-partition
-    sessions take this path, so their pinned behavior is byte-identical).
-    """
+    - ``spark.sql.shuffle.partitions`` (= the stateful operators'
+      state-store partition count, recorded in the checkpoint at the first
+      batch) is sized to the stream's input instead of the batch default:
+      ``ceil(est_input_bytes / STREAM_TARGET_BYTES_PER_PARTITION)`` clamped
+      to ``[floor, session default]``. State-store partitioning is only
+      configurable through this key, and set/restore on the shared session
+      would race concurrent catalog queries (tests/test_concurrency.py).
+    - ``spark.sql.streaming.checkpointFileManagerClass`` is
+      ``CHECKPOINT_FILE_MANAGER``. Measured on a 3-id ``ingest`` pass
+      (JFR ``jdk.ProcessStart``, 4 vCPUs): 393-407 processes started, 200
+      of them ``readlink`` from the default manager's renames, at about
+      2.4 ms CPU each; this manager starts none. Checkpoint checksums and
+      Hadoop's ``.crc`` files stay on.
+
+    ``cloneSession()`` shares the SparkContext and cache and copies the
+    caller's whole session state in one JVM call: its runtime conf
+    (timezone, Arrow, retention caps, ``spark.hadoop.*`` and custom keys,
+    possibly set by an external driver via ``configure_existing``), temp
+    views and registered functions. Nothing is copied key by key, so a
+    static or core key raises nothing. A fresh clone per run, not one
+    cached per caller: a cache would hold a stale conf and collect every
+    run's memory-sink views, and it measured no faster."""
     n_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = min(
         n_default,
         max(floor, -(-int(est_input_bytes) // STREAM_TARGET_BYTES_PER_PARTITION)),
     )
-    if n == n_default:
-        return spark
-    child = spark.newSession()
-    confs = spark._jsparkSession.sessionState().conf().getAllConfs()
-    it = confs.iterator()
-    while it.hasNext():
-        e = it.next()
-        try:
-            child.conf.set(e._1(), e._2())
-        except Exception as exc:
-            # Only a STATIC conf may be skipped (it keeps its builder-level
-            # value, which the child inherits anyway). Anything else means
-            # the child would silently diverge from the parent in more than
-            # the one intended key (ADVICE r16) — propagate it.
-            msg = f"{type(exc).__name__}: {exc}"
-            if (
-                "CANNOT_MODIFY_CONFIG" not in msg
-                and "Cannot modify the value" not in msg
-            ):
-                raise
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     child.conf.set("spark.sql.shuffle.partitions", str(n))
+    child.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+    )
     return child
 
 
@@ -452,7 +461,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``maxFilesPerTrigger`` is left default; schema is explicit (streaming
     file sources require it — and so does the 100 TB posture). The ns→µs
-    conversion mirrors sources/events.py.
+    conversion mirrors sources/events.py. Sets ``nanosAsLong`` on ``spark``,
+    so the runners pass their ``_stream_session``, never the caller's.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
@@ -539,6 +549,7 @@ def run_clean_to_parquet_availablenow(spark: SparkSession, sf_dir: str) -> DataF
     of the sink — which must equal the batch-cleaned table (the oracle
     checks exactly that, and stays equal under replay).
     """
+    spark = _stream_session(spark, _events_bytes(sf_dir))
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -558,6 +569,7 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.readers import read_table
 
+    spark = _stream_session(spark, _events_bytes(sf_dir))
     stream = clean_event_stream(read_events_stream(spark, sf_dir))
     customer = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -599,6 +611,7 @@ def run_fanout_sinks_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     either. Returns both sinks' contents tagged by sink id — the STRONG
     oracle checks each equals the batch-cleaned table (a lost or doubled
     batch in EITHER sink breaks the hash)."""
+    spark = _stream_session(spark, _events_bytes(sf_dir))
     run_dir = scratch_dir("fanout")
     paths = {s: os.path.join(run_dir, s) for s in ("archive", "serving")}
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
