@@ -11,104 +11,57 @@ is only the wiring.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from mini_project_big_data_analysis_spark.queries import all_queries
 from mini_project_big_data_analysis_spark.queries.flagship import flagship
-from mini_project_big_data_analysis_spark.session import configure_existing
+from mini_project_big_data_analysis_spark.session import provision
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    configure_existing(spark)
+    provision(spark)
     return flagship(spark, SMOKE_SF_DIR)
 
 
 def coverage_rotation() -> list[str]:
-    """Driver correctness-coverage rotation for THIS round (round 17).
+    """The driver's correctness window for the next round, computed from the
+    ``CORRECTNESS_r<N>.json`` records next to this file.
 
-    The external driver hash-checks exactly the first 50 ids of ``queries()``
-    iteration order each round, so with 244+ registered ids only a rotating
-    window gets hard driver-recorded rows per round. This hook — separate
-    from the public ``all_queries()`` registration order, which it does NOT
-    affect — declares the round's window explicitly, executing the plan
-    pre-written in COVERAGE_ROTATION.md at the end of round 16, plus one
-    policy extension this round:
-
-    0. ``stream_tws_dedup`` repeats at the head: it FAILED its round-16
-       driver check (protobuf unreachable from the driver's own
-       SparkSession — VERDICT r16 item 1) and a failed window id repeats
-       until its fix earns a green driver row. Its slot pushes
-       ``ext_benford_audit`` into round 18.
-    1. The 45 remaining round-12-stale ids, alphabetical.
-    2. The alphabetically-first round-13-stale strong-check ids to fill
-       to 50.
-
-    See COVERAGE_ROTATION.md's round-18 plan for the pre-written next
-    window.
+    The driver hash-checks the first 50 ids of ``queries()`` iteration order
+    each round, so the window puts first the ids that most need a driver
+    row: ids whose last check failed, then ids the driver never checked,
+    then the rest by (round last checked, id), stalest first. Rows-only ids
+    (no oracle) are left out. COVERAGE_ROTATION.md states the policy.
     """
-    registry_ids = set(all_queries())
-    retry = [qid for qid in ("stream_tws_dedup",) if qid in registry_ids]
-    round12_stalest = [
-        "agg_group_avg",
-        "agg_grouping_sets",
-        "agg_hll_distinct",
-        "agg_min_max",
-        "agg_mode",
-        "agg_pivot",
-        "agg_time_window",
-        "agg_value_counts",
-        "ext_ewma_smooth",
-        "ext_gini_concentration",
-        "ext_incremental_view",
-        "ext_ks_test",
-        "ext_markov_transitions",
-        "ext_multimodal_framesample",
-        "ext_multimodal_resize",
-        "ext_ngram_novelty",
-        "ext_sample_exact_k",
-        "ext_sequence_match",
-        "ext_skyline_pareto",
-        "ext_span_dedup",
-        "ext_time_gapfill",
-        "ext_token_drift",
-        "ext_triangle_count",
-        "ext_vector_quantize",
-        "ext_winsorize",
-        "fn_array_hof",
-        "fn_collation_group",
-        "fn_mapinarrow_norms",
-        "fn_udtf_sentences",
-        "fn_variant_json",
-        "join_null_safe",
-        "join_skew_salt",
-        "setop_intersect_all",
-        "sql_groupby_all",
-        "sql_lateral_view",
-        "sql_pivot",
-        "src_footer_stats",
-        "src_xml_roundtrip",
-        "stream_foreachbatch_upsert",
-        "stream_session_agg",
-        "stream_sliding_agg",
-        "stream_tumbling_agg",
-        "window_rolling_corr",
-        "window_running_distinct",
-        "window_topk_per_group",
-    ]
-    round13_stalest = [
-        "agg_cached_dashboard",
-        "agg_udaf_geomean",
-        "ext_ab_power",
-        "ext_basket_lift",
-        "ext_benford_audit",
-    ]
-    window = retry + round12_stalest + round13_stalest
-    return window[:50]
+    last: dict[str, tuple[int, bool]] = {}
+    root = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        n = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for qid, rec in json.load(f).items():
+                ok = rec["err"] is None and all(
+                    rec[k] for k in ("rows_match", "schema_match", "hash_match")
+                )
+                if qid not in last or last[qid][0] < n:
+                    last[qid] = (n, ok)
+
+    def rank(qid: str) -> tuple:
+        if qid not in last:
+            return (1, 0, qid)
+        n, ok = last[qid]
+        return (2 if ok else 0, n, qid)
+
+    oracle_ids = [qid for qid, q in all_queries().items() if q.oracle is not None]
+    return sorted(oracle_ids, key=rank)[:50]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -116,12 +69,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     Iteration order = ``coverage_rotation()`` ids first (the round's driver
     correctness window, see that hook's docstring), then every remaining
-    registered id in public registration order.
+    registered id in public registration order. Each query provisions the
+    session it is handed (``session.provision``) before it builds.
     """
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            configure_existing(spark)
+            provision(spark)
             return fn(spark, sf_dir)
 
         run.__doc__ = fn.__doc__

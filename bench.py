@@ -80,7 +80,7 @@ def main() -> int:
 
     from mini_project_big_data_analysis_spark.queries import all_queries
     from mini_project_big_data_analysis_spark.record import run_query
-    from mini_project_big_data_analysis_spark.session import get_spark
+    from mini_project_big_data_analysis_spark.session import describe, get_spark
 
     spark = get_spark(app_name="mpbda-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -91,9 +91,10 @@ def main() -> int:
     # master, the context's defaultParallelism, and the data dir so the
     # scaling comparison is self-evidencing. Additions only — the timing
     # protocol and every existing key are unchanged.
+    session = describe(spark)
     run_env = {
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "master": session["master"],
+        "default_parallelism": session["default_parallelism"],
         "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
         "sf_dir": sf_dir,
     }

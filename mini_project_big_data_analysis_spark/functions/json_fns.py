@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def parse_json_permissive(col: Column | str, schema: T.DataType | str) -> Column:
-    """Typed parse; malformed → NULL (consumer.py:38-41 fallback)."""
-    return F.from_json(F.col(col) if isinstance(col, str) else col, schema)
-
-
 def parse_polymorphic_array(
     col: Column | str, array_schema: T.ArrayType
 ) -> Column:

@@ -3,9 +3,9 @@
 Images/audio/video are opaque ``binary`` columns with a typed metadata
 struct riding alongside. The Spark-side machinery — schema, partitioning,
 Arrow batch shape through mapInPandas — is real and tested; the actual
-codec step is stubbed (no image/audio libraries in this container) behind
-``DecodeUnavailable`` or a clearly-marked deterministic fake, so swapping in
-PIL/librosa later changes one function body, not the pipeline.
+codec step is a clearly-marked deterministic fake (no image/audio libraries
+in this container), so swapping in PIL/librosa later changes one function
+body, not the pipeline.
 
 Scale posture: binary payloads dominate row size, so feature extraction uses
 ``mapInPandas`` (streaming Arrow batches, no full-partition materialization)
@@ -42,18 +42,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("head_hex", T.StringType()),
     ]
 )
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised by the real-codec path: decode libs are not in this container."""
-
-
-def decode_image(payload: bytes) -> "object":
-    """STUB — the real implementation is `PIL.Image.open(io.BytesIO(payload))`.
-    Kept as a hard failure (not a silent fake) so callers must opt into
-    ``extract_features`` (deterministic, codec-free) instead.
-    """
-    raise DecodeUnavailable("image codecs not available in this environment")
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -39,11 +39,6 @@ def hash_bucket(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("bigint")
 
 
-def hash_bucket_sql(expr: str, salt: str = "") -> str:
-    """The DuckDB mirror of :func:`hash_bucket` (same value, same type)."""
-    return f"(('0x' || substr(md5({expr}::VARCHAR || '{salt}'), 1, 8))::UBIGINT)::BIGINT"
-
-
 def hash_split(
     df: DataFrame,
     weights: dict[str, float],

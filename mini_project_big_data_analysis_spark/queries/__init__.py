@@ -36,7 +36,7 @@ def all_queries() -> dict[str, Query]:
     driver's per-round correctness-coverage rotation (which 50 ids get hard
     hash-checked rows this round) is deliberately NOT encoded here — it lives
     in ``__spark_entry__.py::coverage_rotation()`` with its own documentation
-    and an audit trail in COVERAGE_ROTATION.md, so reordering for coverage
+    and the policy in COVERAGE_ROTATION.md, so reordering for coverage
     can never silently change library behavior.
     """
     return dict(REGISTRY)

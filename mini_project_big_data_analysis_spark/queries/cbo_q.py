@@ -148,17 +148,6 @@ def ensure_stats_tables(
     return out
 
 
-def catalog_size_bytes(spark: SparkSession, table: str) -> int:
-    """The ANALYZE-recorded table size from the catalog (public surface:
-    DESCRIBE EXTENDED's Statistics row, 'NNN bytes, MMM rows')."""
-    row = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-        .filter("col_name = 'Statistics'")
-        .collect()
-    )
-    return int(row[0].data_type.split(" bytes")[0])
-
-
 @register(
     "sql_cbo_broadcast",
     """

@@ -102,10 +102,10 @@ def stream_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer.py:21-23) and the sink must hash-equal the single-delivery
     event log — one surviving duplicate or lost key breaks the hash.
 
-    Registered in round 16 after vendoring a minimal pure-Python protobuf
-    runtime (vendor/google/protobuf/_mini_runtime.py) for the state-server
-    protocol this container's pyspark could not drive before — see
-    streaming/pipeline.py:tws_available."""
+    The state server's protocol needs ``google.protobuf`` in the Python
+    workers; without a real distribution the vendored runtime
+    (vendor/google/protobuf/_mini_runtime.py) serves it — see
+    streaming/pipeline.py:run_tws_dedup."""
     from ..streaming.pipeline import run_tws_dedup
 
     return run_tws_dedup(spark, sf_dir)

@@ -15,6 +15,8 @@ what the run did:
   Spark jobs the run started (skipped stages excluded);
 - ``compiles``: classes Janino compiled during the run
   (``session.compiled_classes``);
+- ``session``: what the session is (``session.describe``: master, default
+  parallelism, compiled-class cache entries);
 - ``stream``: when the run started streaming queries, one summary of their
   micro-batch progress (``STREAM_FIELDS`` plus ``names``, the query names,
   which tell the TWS path ``tws_dedup_<hex>`` from its fallback
@@ -46,7 +48,7 @@ import time
 from py4j.protocol import Py4JJavaError
 
 from .queries import all_queries
-from .session import compiled_classes
+from .session import compiled_classes, describe
 from .streaming import pipeline
 
 STAGE_FIELDS = ("stages", "tasks", "failed_tasks", "input_rows", "input_bytes",
@@ -85,6 +87,7 @@ def run_query(spark, qid: str, sf_dir: str, action=noop_write) -> dict:
         "jobs": end_job - first_job,
         **_stage_counters(sc.statusStore(), qid, first_job, end_job),
         "compiles": compiled_classes(spark) - compiled,
+        "session": describe(spark),
         "stream": _stream_summary(progress),
         "result": result,
     }

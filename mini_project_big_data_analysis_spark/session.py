@@ -20,6 +20,16 @@ Pinned semantics (SURVEY.md §7 step 0):
   30-42 KB per class (after one catalog pass, JVM live memory rose 143 ->
   202 MB from 100 to 4096 entries, and 532 -> 615 MB unbounded on a larger
   heap). The second catalog pass then compiles 72 classes instead of 2 703.
+- Provisioning — ``provision(spark)`` is the one function that readies a
+  session, whether ``get_spark`` built it or a driver handed it in. It sets
+  ``RUNTIME_CONF`` (the builder applies the same dict, so ``newSession()``
+  children inherit it) and puts the package root, plus the vendored protobuf
+  when the driver resolved that shim, on ``sc.environment["PYTHONPATH"]``.
+  Spark merges that entry into the ``PYTHONPATH`` of every Python worker
+  whose UDF is created afterwards, so workers import the package however the
+  driver process was started. Static keys (the codegen cache, memory,
+  master) cannot change on a live session: a session built elsewhere keeps
+  its own, and ``describe(spark)`` says which it has.
 """
 
 from __future__ import annotations
@@ -34,14 +44,27 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: Entries of Spark's compiled-class cache (module docstring).
 CODEGEN_CACHE_ENTRIES = 4096
 
+#: The engine's session semantics that a live session can still change.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+#: The directory that holds the package: what a Python worker needs on its
+#: path to import it.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "mini-project-big-data-analysis-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+    """Build (or reuse) the engine's SparkSession, provisioned.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
     the same entry point serves tests (local[2]) and bench (local[32]).
@@ -54,32 +77,15 @@ def get_spark(
     (``lineitem`` etc.) whose namespace is the session, so a shared session
     is last-writer-wins across datasets. Engine conf is set at BUILDER
     level below precisely so child sessions inherit the 100 TB posture.
+    ``extra_conf`` adds builder keys; ``provision`` sets ``RUNTIME_CONF``
+    over them.
     """
-    # Must run BEFORE the JVM launches: the gateway inherits this process's
-    # environment, and Python workers take their import path from the env's
-    # PYTHONPATH — this is what lets transformWithStateInPandas workers
-    # import (the vendored) google.protobuf. No-op when protobuf is real.
-    from .vendor import enable_protobuf_shim
-
-    enable_protobuf_shim()
-
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
-
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Partitions sized for executor memory at scale (SURVEY.md §4.4);
         # 128 MiB is the parquet-friendly default and what we'd ship at 100 TB.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
@@ -99,9 +105,41 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return provision(builder.getOrCreate())
+
+
+def provision(spark: SparkSession) -> SparkSession:
+    """Ready ``spark`` for the engine (module docstring, "Provisioning");
+    idempotent. A ``RUNTIME_CONF`` key the hosting harness has fixed keeps
+    the harness's value."""
+    from .vendor import worker_paths
+
+    for key, value in RUNTIME_CONF.items():
+        try:
+            spark.conf.set(key, value)
+        except AnalysisException:
+            pass
+    env = spark.sparkContext.environment
+    have = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    missing = [p for p in (PACKAGE_ROOT, *worker_paths()) if p not in have]
+    if missing:
+        env["PYTHONPATH"] = os.pathsep.join(missing + have)
+    return spark
+
+
+def describe(spark: SparkSession) -> dict:
+    """What a run's session is: its master, the cores its tasks run on and
+    the entries of its compiled-class cache (``CODEGEN_CACHE_ENTRIES`` under
+    ``get_spark``; a session built elsewhere keeps its own, Spark's default
+    being 100)."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "codegen_cache_entries": int(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+    }
 
 
 def compiled_classes(spark: SparkSession) -> int:
@@ -109,24 +147,3 @@ def compiled_classes(spark: SparkSession) -> int:
     compiled-class cache (``CODEGEN_CACHE_ENTRIES``) adds one."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
-def configure_existing(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable semantics to a session we did not
-    build (the driver hands ``entry()``/``queries()`` an existing session).
-
-    Only runtime-mutable confs belong here: timezone and AQE are settable on
-    a live session; memory/master are not. Nor is
-    ``spark.sql.codegen.cache.maxEntries``: it is a static conf, so a session
-    built outside the package keeps Spark's 100 entries unless its own
-    builder sets the key.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except AnalysisException:  # the harness has fixed this conf
-        pass
-    return spark

@@ -13,7 +13,9 @@ How Spark surfaces that column depends on the runtime:
 
 ``load_events`` adapts to whichever schema the runtime produces and always
 returns ``ts`` as a proper µs TimestampType with identical values, so every
-downstream query is runtime-agnostic.
+downstream query is runtime-agnostic. The stream readers take the same
+probed schema and ``ts`` conversion (``stream_events``), so batch and
+stream change session conf under the same single condition.
 
 Pushdown: the time range is applied to the column AS THE SCAN PRODUCES IT
 (long ns compared to long literals, or native timestamp compared to
@@ -25,37 +27,15 @@ and reading a decade.
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import DataType, LongType, StructType
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-#: any epoch-µs value for 1973–5138 sits below this; any epoch-ns value for
-#: dates after 1973 sits above it — so one row-local comparison tells the
-#: two apart without a driver-side probe (streamable, codegen-friendly).
-_NS_MAGNITUDE_FLOOR = 10**17
-
-
-def raw_epoch_to_ts(col_name: str) -> F.Column:
-    """INT64 event-time column of UNKNOWN unit (ns or µs) → µs TimestampType.
-
-    Readers that surface the parquet INT64(TIMESTAMP(NANOS)) column through
-    an explicit LongType schema get nanoseconds on legacy runtimes but
-    µs-truncated values on newer ones (the reader truncates before applying
-    the user schema). The magnitude test makes the conversion correct under
-    both, including inside streaming plans where no driver probe can run.
-    Integer ``div`` keeps the full 64-bit value (a float division would
-    round the low bits of an ns epoch before truncation).
-    """
-    return F.expr(
-        f"timestamp_micros(CASE WHEN {col_name} > {_NS_MAGNITUDE_FLOOR}"
-        f" THEN {col_name} div 1000 ELSE {col_name} END)"
-    )
 
 
 def _ts_ns_literal(ts: str) -> int:
@@ -74,11 +54,13 @@ def _ts_ns_literal(ts: str) -> int:
 _SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
-def _events_scan(spark: SparkSession, path: str):
-    """The raw events scan with its runtime ``ts`` type, probing the footer
-    only on first contact with a given file."""
-    import os
-
+def events_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema this runtime's reader gives the events file at ``path``,
+    probing the footer only on first contact with a given file. A reader
+    that refuses INT64(TIMESTAMP(NANOS)) (PARQUET_TYPE_ILLEGAL) gets
+    ``nanosAsLong`` set on ``spark`` and a long ``ts``; that is the only
+    case in which this writes conf. Any other error (a missing path, say)
+    propagates with the session conf untouched."""
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -87,26 +69,45 @@ def _events_scan(spark: SparkSession, path: str):
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         try:
-            raw = spark.read.parquet(path)
-            schema = raw.schema
+            schema = spark.read.parquet(path).schema
         except AnalysisException as exc:
-            # A reader that refuses INT64(TIMESTAMP(NANOS)) outright: fall
-            # back to the nanos-as-long escape hatch and retry. Any other
-            # error (a missing path, say) propagates with the session conf
-            # untouched.
             if exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
                 raise
             spark.conf.set(_NANOS_CONF, "true")
-            raw = spark.read.parquet(path)
-            schema = raw.schema
+            schema = spark.read.parquet(path).schema
         _SCHEMA_CACHE[key] = schema
-        return raw, schema["ts"].dataType
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, LongType):
+    elif isinstance(schema["ts"].dataType, LongType):
         # the cached schema came from the legacy fallback; a sibling session
         # created after the probe needs the conf too (session-scoped)
         spark.conf.set(_NANOS_CONF, "true")
-    return spark.read.schema(schema).parquet(path), ts_type
+    return schema
+
+
+def ts_to_timestamp(raw: DataFrame, ts_type: DataType) -> DataFrame:
+    """``raw`` with its scanned ``ts`` (of ``ts_type``, as ``events_schema``
+    gives it) as a µs TimestampType: a long of nanoseconds is truncated to
+    µs; NTZ wall time was written as UTC instants and the session runs in
+    UTC (session.py), so the cast re-labels without shifting values."""
+    if isinstance(ts_type, LongType):
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type.typeName() != "timestamp":
+        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw
+
+
+def _events_scan(spark: SparkSession, path: str):
+    """The raw events scan and its runtime ``ts`` type."""
+    schema = events_schema(spark, path)
+    return spark.read.schema(schema).parquet(path), schema["ts"].dataType
+
+
+def stream_events(spark: SparkSession, src_dir: str, schema_file: str, **options) -> DataFrame:
+    """File-source stream over the events files in ``src_dir``, read the way
+    ``load_events`` reads ``schema_file`` (same schema, same ``ts``
+    conversion); ``options`` go to the stream reader."""
+    schema = events_schema(spark, schema_file)
+    raw = spark.readStream.schema(schema).options(**options).parquet(src_dir)
+    return ts_to_timestamp(raw, schema["ts"].dataType)
 
 
 def load_events(
@@ -120,33 +121,18 @@ def load_events(
     whole-second bounds) is applied to the raw scan column so it reaches the
     parquet scan as a pushed filter / row-group prune.
     """
-    path = f"{sf_dir}/events.parquet"
-    raw, ts_type = _events_scan(spark, path)
-
-    if isinstance(ts_type, LongType):
-        if ts_between is not None:
-            lo, hi = ts_between
+    raw, ts_type = _events_scan(spark, f"{sf_dir}/events.parquet")
+    if ts_between is not None:
+        lo, hi = ts_between
+        if isinstance(ts_type, LongType):
             # µs-truncated ts ≤ hi ⟺ ns ts ≤ hi·10⁹ + 999 (whole-second
             # bounds), so the ns-side range is inclusive-equivalent to the
             # µs-side BETWEEN.
-            raw = raw.filter(
-                F.col("ts").between(
-                    F.lit(_ts_ns_literal(lo)), F.lit(_ts_ns_literal(hi) + 999)
-                )
-            )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-    # Native timestamp read (TIMESTAMP_NTZ or TIMESTAMP): the reader already
-    # truncated ns → µs, so whole-second bounds are inclusive-equivalent.
-    if ts_between is not None:
-        lo, hi = ts_between
-        raw = raw.filter(
-            F.col("ts").between(
-                F.lit(lo).cast(ts_type), F.lit(hi).cast(ts_type)
-            )
-        )
-    if ts_type.typeName() != "timestamp":
-        # NTZ wall time was written as UTC instants; the session runs in UTC
-        # (session.py), so the cast re-labels without shifting values.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+            bounds = F.lit(_ts_ns_literal(lo)), F.lit(_ts_ns_literal(hi) + 999)
+        else:
+            # Native timestamp read (TIMESTAMP_NTZ or TIMESTAMP): the reader
+            # already truncated ns → µs, so whole-second bounds are
+            # inclusive-equivalent.
+            bounds = F.lit(lo).cast(ts_type), F.lit(hi).cast(ts_type)
+        raw = raw.filter(F.col("ts").between(*bounds))
+    return ts_to_timestamp(raw, ts_type)

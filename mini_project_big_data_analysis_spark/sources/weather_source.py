@@ -20,6 +20,7 @@ the live source; the plumbing is unchanged.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -148,8 +149,8 @@ class WeatherPollDataSource(DataSource):
 def register_weather_source(spark) -> None:
     try:
         spark.dataSource.register(WeatherPollDataSource)
-    except Exception as exc:
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
+    except AnalysisException as exc:
+        if exc.getCondition() != "DATA_SOURCE_ALREADY_EXISTS":
             raise
         # Spark 4.1 inconsistency around newSession(): the registration
         # API's existence check sees a name registered by a SIBLING

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -351,7 +352,7 @@ class JdbcKeyedStore(KeyedTableStore):
             jvm.java.lang.Class.forName(self.driver)
         try:
             conn = jvm.java.sql.DriverManager.getConnection(self.url)
-        except Exception:
+        except Py4JJavaError:
             return False  # database itself not created yet (embedded URLs)
         try:
             # JDBC metadata probe; table names are case-normalized by the

@@ -176,21 +176,24 @@ def test_containment_catches_asymmetric_dups(spark, sf_dir):
 
 def test_tws_dedup_exactly_once(spark, sf_dir):
     """transformWithStateInPandas needs google.protobuf in the workers —
-    vendored as of round 16 (the mini runtime,
-    vendor/google/protobuf/_mini_runtime.py), so the gate is always open
-    here and the exactly-once property is asserted unconditionally: the
-    replayed batch's duplicates must be suppressed by the per-user
+    vendored (the mini runtime, vendor/google/protobuf/_mini_runtime.py)
+    and put on their path by ``session.provision`` — so the run must take
+    the state-API path (its record names ``tws_dedup_<hex>``, not the
+    fallback) and the exactly-once property is asserted unconditionally:
+    the replayed batch's duplicates must be suppressed by the per-user
     ListState, and nothing lost."""
     import pyspark.sql.functions as F
 
+    from mini_project_big_data_analysis_spark.record import run_query
     from mini_project_big_data_analysis_spark.sources.readers import read_table
-    from mini_project_big_data_analysis_spark.streaming.pipeline import (
-        run_tws_dedup,
-        tws_available,
-    )
 
-    assert tws_available(), "vendored protobuf shim failed to enable"
-    got = run_tws_dedup(spark, sf_dir)
+    rec = run_query(spark, "stream_tws_dedup", sf_dir, action=lambda df: df)
+    names = rec["stream"]["names"]
+    assert names and all(
+        n.startswith("tws_dedup_") and not n.startswith("tws_dedup_fallback_")
+        for n in names
+    ), names
+    got = rec["result"]
     assert got.groupBy("event_id").count().filter("count > 1").count() == 0
     expected = (
         read_table(spark, sf_dir, "events")

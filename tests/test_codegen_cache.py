@@ -38,25 +38,53 @@ def test_warm_dashboard_pass_compiles_nothing(spark, sf_dir):
     assert one_pass() == 0, "a warm dashboard pass recompiled evicted classes"
 
 
+def test_record_names_the_session_cache_size(spark, sf_dir):
+    """Under ``get_spark`` the record's ``session`` shows the sized cache;
+    an external session's (Spark's default of 100) is pinned in
+    tests/test_external_session.py."""
+    from mini_project_big_data_analysis_spark.record import run_query
+
+    rec = run_query(spark, "agg_group_avg", sf_dir)
+    assert rec["session"] == {
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "codegen_cache_entries": session.CODEGEN_CACHE_ENTRIES,
+    }
+
+
 class _Conf:
     def __init__(self, error: Exception) -> None:
         self.error = error
+        self.values: dict[str, str] = {}
 
     def set(self, key: str, value: str) -> None:
         if key == "spark.sql.execution.arrow.pyspark.enabled":
             raise self.error
+        self.values[key] = value
+
+
+class _Context:
+    def __init__(self) -> None:
+        self.environment: dict[str, str] = {}
 
 
 class _Session:
     def __init__(self, error: Exception) -> None:
         self.conf = _Conf(error)
+        self.sparkContext = _Context()
 
 
-def test_configure_existing_tolerates_a_fixed_conf():
+def test_provision_tolerates_a_fixed_conf():
     fake = _Session(session.AnalysisException(message="cannot modify"))
-    assert session.configure_existing(fake) is fake
+    assert session.provision(fake) is fake
+    # the other keys are still set and the workers still get the package
+    assert fake.conf.values == {
+        k: v for k, v in session.RUNTIME_CONF.items()
+        if k != "spark.sql.execution.arrow.pyspark.enabled"
+    }
+    assert session.PACKAGE_ROOT in fake.sparkContext.environment["PYTHONPATH"]
 
 
-def test_configure_existing_propagates_other_errors():
+def test_provision_propagates_other_errors():
     with pytest.raises(ConnectionError):
-        session.configure_existing(_Session(ConnectionError("gateway gone")))
+        session.provision(_Session(ConnectionError("gateway gone")))

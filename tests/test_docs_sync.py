@@ -50,32 +50,6 @@ def test_survey_lists_every_registered_id():
     assert not missing, f"registered ids absent from SURVEY.md §2: {missing}"
 
 
-def test_rotation_doc_window_matches_code():
-    """The round-N window section of COVERAGE_ROTATION.md and
-    ``coverage_rotation()`` are updated together by policy; this pins that
-    every id in the code window appears in the doc's current-round window
-    section and vice versa (transcription drift between the audit trail
-    and the executable hook would silently mis-document driver coverage)."""
-    import re
-    import sys
-
-    sys.path.insert(0, str(ROOT))
-    import __spark_entry__ as entry
-
-    window = set(entry.coverage_rotation())
-    doc = (ROOT / "COVERAGE_ROTATION.md").read_text()
-    m = re.search(
-        r"## Round (\d+) window \(50 ids\)\n(.*?)\n## ", doc, re.DOTALL
-    )
-    assert m, "no current-round window section found"
-    doc_ids = set(re.findall(r"`([a-z0-9_\s]+)`", m.group(2)))
-    doc_ids = {i for blob in doc_ids for i in blob.split()}
-    only_code = sorted(window - doc_ids)
-    only_doc = sorted(doc_ids & set(entry.queries()) - window)
-    assert not only_code, f"in coverage_rotation() but not the doc: {only_code}"
-    assert not only_doc, f"in the doc window but not coverage_rotation(): {only_doc}"
-
-
 def test_sf100_compare_count_matches_scaling_record():
     """README's sf100 paragraph and SCALING.md's fifth-point record are
     hand-written twins; pin the headline compare count so the two can't

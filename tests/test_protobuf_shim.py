@@ -138,19 +138,28 @@ def test_enum_constants_module_level():
     assert sm.HandleState.Name(3) == "DATA_PROCESSED"
 
 
-def test_real_distribution_wins_and_env_propagates():
+def test_real_distribution_wins_and_env_propagates(spark):
     """The shim only APPENDS to sys.path (a real protobuf install shadows
-    it) and prepends its dir to PYTHONPATH exactly once (workers inherit
-    the env; idempotency keeps repeated get_spark calls from growing it)."""
+    it) and leaves the process environment alone; the workers get it from
+    ``session.provision``, which puts its dir on the session's worker
+    PYTHONPATH exactly once, and only when the driver resolved the shim."""
     import os
     import sys
 
-    from mini_project_big_data_analysis_spark import vendor
+    import google.protobuf as pb
 
+    from mini_project_big_data_analysis_spark import vendor
+    from mini_project_big_data_analysis_spark.session import provision
+
+    env_before = os.environ.get("PYTHONPATH")
     enable_protobuf_shim()
     n_path = sys.path.count(vendor._VENDOR_DIR)
     assert n_path <= 1
     enable_protobuf_shim()
     assert sys.path.count(vendor._VENDOR_DIR) == n_path
-    parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    assert parts.count(vendor._VENDOR_DIR) == 1
+    assert os.environ.get("PYTHONPATH") == env_before
+
+    provision(provision(spark))
+    parts = spark.sparkContext.environment["PYTHONPATH"].split(os.pathsep)
+    shimmed = pb.__file__.startswith(vendor._VENDOR_DIR)
+    assert parts.count(vendor._VENDOR_DIR) == int(shimmed)

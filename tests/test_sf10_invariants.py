@@ -277,19 +277,13 @@ def test_stream_dedup_watermark_bounds_state_at_sf10(spark, tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from mini_project_big_data_analysis_spark.sources.events import raw_epoch_to_ts
+    from mini_project_big_data_analysis_spark.sources.events import stream_events
     from mini_project_big_data_analysis_spark.streaming.pipeline import (
-        EVENTS_RAW,
         clean_event_stream,
     )
 
-    t = pq.read_table(os.path.join(SF10_DIR, "events.parquet"))
-    # int64 epoch ts (µs after the cast below — raw_epoch_to_ts's magnitude
-    # test handles either unit), time-sorted so arrival order = event order
-    t = t.sort_by("ts")
-    t = t.set_column(
-        t.schema.get_field_index("ts"), "ts", pc.cast(t["ts"], "int64")
-    )
+    # time-sorted so arrival order = event order
+    t = pq.read_table(os.path.join(SF10_DIR, "events.parquet")).sort_by("ts")
     n_keys = len(
         t.filter(
             pc.and_(
@@ -313,12 +307,14 @@ def test_stream_dedup_watermark_bounds_state_at_sf10(spark, tmp_path):
             os.utime(p, (mtime, mtime))
 
     sink = tmp_path / "sink"
-    raw = (
-        spark.readStream.schema(EVENTS_RAW)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(delivery))
+    stream = clean_event_stream(
+        stream_events(
+            spark,
+            str(delivery),
+            str(delivery / "chunk_000_a.parquet"),
+            maxFilesPerTrigger=2,
+        )
     )
-    stream = clean_event_stream(raw.withColumn("ts", raw_epoch_to_ts("ts")))
     # dropDuplicatesWithinWatermark, NOT dropDuplicates: the plain form on
     # a key subset without the event-time column NEVER evicts state — this
     # very test measured peak state = the full 10M-key domain before the
@@ -381,19 +377,14 @@ def test_stream_stream_join_watermark_bounds_state_at_sf10(spark, tmp_path):
     state. Paced, time-ordered delivery of sf10's 10M events must show
     peak join state at a small fraction of the click+purchase row count,
     with the streamed sink still row-identical to the batch band join."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from mini_project_big_data_analysis_spark.sources.events import raw_epoch_to_ts
+    from mini_project_big_data_analysis_spark.sources.events import stream_events
     from mini_project_big_data_analysis_spark.streaming.pipeline import (
-        EVENTS_RAW,
         clean_event_stream,
     )
 
     t = pq.read_table(os.path.join(SF10_DIR, "events.parquet")).sort_by("ts")
-    t = t.set_column(
-        t.schema.get_field_index("ts"), "ts", pc.cast(t["ts"], "int64")
-    )
     n_chunks = 8
     delivery = tmp_path / "delivery"
     delivery.mkdir()
@@ -405,12 +396,14 @@ def test_stream_stream_join_watermark_bounds_state_at_sf10(spark, tmp_path):
         mtime += 10
         os.utime(p, (mtime, mtime))
 
-    raw = (
-        spark.readStream.schema(EVENTS_RAW)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(delivery))
+    ev = clean_event_stream(
+        stream_events(
+            spark,
+            str(delivery),
+            str(delivery / "chunk_000.parquet"),
+            maxFilesPerTrigger=1,
+        )
     )
-    ev = clean_event_stream(raw.withColumn("ts", raw_epoch_to_ts("ts")))
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(
@@ -523,20 +516,15 @@ def test_stream_tumbling_agg_watermark_bounds_state_at_sf10(spark, tmp_path):
     fraction of the total (window × event_type) domain the corpus spans,
     while append mode emits every closed window exactly once (sink ==
     batch hourly aggregate for all windows the final watermark passed)."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from mini_project_big_data_analysis_spark.sources.events import raw_epoch_to_ts
+    from mini_project_big_data_analysis_spark.sources.events import stream_events
     from mini_project_big_data_analysis_spark.streaming.pipeline import (
-        EVENTS_RAW,
         clean_event_stream,
         tumbling_agg,
     )
 
     t = pq.read_table(os.path.join(SF10_DIR, "events.parquet")).sort_by("ts")
-    t = t.set_column(
-        t.schema.get_field_index("ts"), "ts", pc.cast(t["ts"], "int64")
-    )
     n_chunks = 8
     delivery = tmp_path / "delivery"
     delivery.mkdir()
@@ -548,13 +536,15 @@ def test_stream_tumbling_agg_watermark_bounds_state_at_sf10(spark, tmp_path):
         mtime += 10
         os.utime(p, (mtime, mtime))
 
-    raw = (
-        spark.readStream.schema(EVENTS_RAW)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(delivery))
-    )
     agg = tumbling_agg(
-        clean_event_stream(raw.withColumn("ts", raw_epoch_to_ts("ts")))
+        clean_event_stream(
+            stream_events(
+                spark,
+                str(delivery),
+                str(delivery / "chunk_000.parquet"),
+                maxFilesPerTrigger=1,
+            )
+        )
     )
     sink = tmp_path / "sink"
     q = (

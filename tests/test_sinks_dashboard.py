@@ -662,3 +662,27 @@ def test_document_store_id_projection_is_load_bearing(spark):
         "_ensure_schema never issued find({}, {'_id': 0}) — the server-side "
         "projection was dropped"
     )
+
+
+def test_jdbc_exists_reads_only_a_failed_connect_as_absent(spark, tmp_path):
+    """``JdbcKeyedStore.exists`` answers False when the JDBC connect itself
+    fails (the database is not created yet); an error from anywhere else,
+    such as a broken gateway, propagates instead of reading as absent."""
+    from types import SimpleNamespace
+
+    from mini_project_big_data_analysis_spark.sources.writers import (
+        DERBY_DRIVER,
+        JdbcKeyedStore,
+    )
+
+    missing = f"jdbc:derby:{tmp_path / 'never_created'}"
+    assert not JdbcKeyedStore(spark, missing, "t", driver=DERBY_DRIVER).exists()
+
+    def gateway_gone(url):
+        raise ConnectionError("gateway gone")
+
+    driver_manager = SimpleNamespace(getConnection=gateway_gone)
+    jvm = SimpleNamespace(java=SimpleNamespace(sql=SimpleNamespace(DriverManager=driver_manager)))
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(_jvm=jvm))
+    with pytest.raises(ConnectionError, match="gateway gone"):
+        JdbcKeyedStore(fake, missing, "t").exists()

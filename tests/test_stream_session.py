@@ -1,10 +1,10 @@
 """Pins for the session every streaming run starts on
 (``streaming/pipeline.py::_stream_session``).
 
-- a run writes nothing to the caller's session: ``read_events_stream``
-  sets ``nanosAsLong`` on the session it is given, and a run on the
-  caller's own session left every later batch parquet read in it reading
-  nanosecond timestamps as longs;
+- a run writes nothing to the caller's session, and neither does a direct
+  ``read_events_stream`` on a file the runtime reads natively: a conf it
+  set (``nanosAsLong``) would make every later batch parquet read in that
+  session read nanosecond timestamps as longs;
 - the stream session carries the caller's conf, ``spark.hadoop.*`` and
   custom keys included, and copying it raises nothing;
 - every start through ``_run_stream`` runs on an owned session whose
@@ -52,6 +52,17 @@ def test_stream_run_leaves_caller_conf_untouched(spark, sf_dir, qid):
     before = _all_confs(caller)
     df = all_queries()[qid].fn(caller, sf_dir)
     assert df.count() > 0
+    assert _all_confs(caller) == before
+
+
+def test_read_events_stream_leaves_caller_conf_untouched(spark, sf_dir):
+    """The stream takes the batch reader's probed schema and ``ts``
+    conversion, so it sets conf only where the batch read would."""
+    caller = spark.newSession()
+    before = _all_confs(caller)
+    stream = pipeline.read_events_stream(caller, sf_dir)
+    assert stream.isStreaming
+    assert stream.schema["ts"].dataType.typeName() == "timestamp"
     assert _all_confs(caller) == before
 
 

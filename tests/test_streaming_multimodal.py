@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from mini_project_big_data_analysis_spark.operators.multimodal import (
     attach_binary_payload,
     extract_features,
@@ -234,3 +236,21 @@ def test_stream_budget_exhaustion_raises_not_partial(spark, sf_dir, monkeypatch)
     ):
         with pytest.raises(TimeoutError, match="SPARK_GRAFT_STREAM_BUDGET_S"):
             runner(spark, sf_dir)
+
+
+def test_weather_poll_registration_propagates_unrelated_errors():
+    """Only the DATA_SOURCE_ALREADY_EXISTS condition takes the sibling-session
+    path: any other error from registration propagates as raised, even one
+    whose message happens to carry that text."""
+    from types import SimpleNamespace
+
+    from mini_project_big_data_analysis_spark.sources.weather_source import (
+        register_weather_source,
+    )
+
+    def gateway_gone(cls):
+        raise ConnectionError("gateway gone while DATA_SOURCE_ALREADY_EXISTS was logged")
+
+    fake = SimpleNamespace(dataSource=SimpleNamespace(register=gateway_gone))
+    with pytest.raises(ConnectionError, match="gateway gone"):
+        register_weather_source(fake)

@@ -1,11 +1,12 @@
-"""Round-17 pins for stream_tws_dedup's protobuf reachability contract.
+"""Pins for stream_tws_dedup's protobuf reachability contract.
 
-The round-16 driver verdict: the query crashed under any SparkSession not
-built by get_spark(), because the vendored google.protobuf was only
-reachable via a pre-JVM $PYTHONPATH export. The fix routes the vendor dir
-through ``sc.environment`` (merged into the worker PYTHONPATH by
-PythonWorkerFactory at UDF-wrap time) and adds a gated dropDuplicates
-fallback instead of a crash. These tests pin both halves."""
+The state server's Python workers import ``google.protobuf``.
+``session.provision`` routes the package root and, when the driver
+resolved the vendored runtime, its dir through ``sc.environment``, which
+Spark merges into the worker PYTHONPATH of every UDF created afterwards,
+so it reaches the workers of a session built anywhere. If the workers still
+crash, the query falls back to dropDuplicates instead of failing. These
+tests pin both halves."""
 
 from __future__ import annotations
 
@@ -16,10 +17,8 @@ import pytest
 
 from mini_project_big_data_analysis_spark.sources.readers import read_table
 from mini_project_big_data_analysis_spark.streaming import pipeline
-from mini_project_big_data_analysis_spark.vendor import (
-    _VENDOR_DIR,
-    provision_protobuf_for_session,
-)
+from mini_project_big_data_analysis_spark.session import PACKAGE_ROOT, provision
+from mini_project_big_data_analysis_spark.vendor import _VENDOR_DIR
 
 
 def _expected_dedup(spark, sf_dir):
@@ -36,15 +35,18 @@ def _expected_dedup(spark, sf_dir):
 
 
 def test_provision_reaches_sc_environment(spark):
-    """With no real protobuf installed (this container), provisioning must
-    put the vendor dir on sc.environment's PYTHONPATH — the only channel
-    that reaches the TWS driver worker of an externally built session."""
-    assert provision_protobuf_for_session(spark)
+    """Provisioning puts the package root, and the vendor dir when the
+    driver resolved the shim (no real protobuf installed), on
+    sc.environment's PYTHONPATH: the channel that reaches the TWS driver
+    worker of an externally built session. Repeating it adds nothing."""
+    provision(spark)
+    provision(spark)
     import google.protobuf as pb
 
-    if (getattr(pb, "__file__", "") or "").startswith(_VENDOR_DIR):
-        env_path = spark.sparkContext.environment.get("PYTHONPATH", "")
-        assert _VENDOR_DIR in env_path.split(os.pathsep)
+    parts = spark.sparkContext.environment["PYTHONPATH"].split(os.pathsep)
+    assert parts.count(PACKAGE_ROOT) == 1
+    if pb.__file__.startswith(_VENDOR_DIR):
+        assert parts.count(_VENDOR_DIR) == 1
 
 
 def test_tws_fallback_result_identical(spark, sf_dir, monkeypatch, tmp_path):
