@@ -5,14 +5,15 @@ and print ONE JSON line:
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1}
 
-Timing protocol (BASELINE.md, scripts/bench_baseline.py): per measured id,
-one WARM run (discarded), then best-of-2 timed runs to a noop sink (measures
-compute + shuffle, not driver collect), each through record.run_query; the
-full tier's kept draw per id lands in BENCH_FULL.json "records" (phase
-times, job/stage counters, compiled classes, streaming summary). The
-discarded warm run is what makes
-the recorded number comparable to BASELINE.md's warm-median rows: the first
-execution of an id pays Python-worker pool spin-up, Arrow serializer init,
+Timing protocol: per measured id, one WARM run (discarded), then the
+minimum of 2 timed runs (3 in the headline tier) to a noop sink (measures
+compute + shuffle, not driver collect), each through record.run_query.
+scripts/bench_baseline.py, which fills BASELINE.md, shares the warm discard
+but keeps the mean of its 2 timed runs, not the minimum. The full tier's
+kept draw per id lands in BENCH_FULL.json "records" (phase times, job/stage
+counters, compiled classes, streaming summary). The discarded warm run is
+what makes the recorded number comparable to BASELINE.md's warm rows: the
+first execution of an id pays Python-worker pool spin-up, Arrow serializer init,
 and codegen for plans the JVM warm-up never touched — round 5 measured the
 SAME ids 2-8× slower when the clock included that first run (BENCH_r05
 headline 35.75 s vs 15.87 s baseline sum) while the warm full tier of the
@@ -131,8 +132,8 @@ def main() -> int:
     # session, scans, and codegen machinery before any clock starts.
     run_query(spark, "agg_global_stats", sf_dir)
 
-    # Per-id protocol = scripts/bench_baseline.py's: warm run (discarded),
-    # then best-of-2 timed. Round 5 proved that ONLY warming the JVM is not
+    # Per-id protocol: warm run (discarded), then the minimum of the timed
+    # runs (scripts/bench_baseline.py keeps the mean of 2). Round 5 proved that ONLY warming the JVM is not
     # enough — each id's first run additionally pays Python-worker spin-up
     # and its own codegen, and charging that to the id put 12/20 headline
     # entries >2× their warm BASELINE.md rows while the same ids measured
@@ -154,7 +155,7 @@ def main() -> int:
     total = round(sum(timings.values()), 3)
 
     # Second tier: the ENTIRE catalog, warm-discarded + best-of-2 per query
-    # (same protocol as the headline tier and bench_baseline.py) — cross-round
+    # (the headline tier's protocol with one draw fewer) — cross-round
     # regression coverage for the writes/streaming tail the headline set
     # skips. The discarded warm run is load-bearing here too: round 5's
     # best-of-2-without-warm full tier recorded flagship at 6.95 s vs its own

@@ -29,22 +29,20 @@ def _spread(vectors: DataFrame) -> DataFrame:
     """Raise input parallelism to the session default when the scan reads
     fewer files than cores (a single small parquet file reads as ONE
     partition locally — the non-codegen higher-order cosine would then run
-    on one core). Plan-side check only: ``inputFiles()`` walks the analyzed
-    plan without materializing an RDD. Files larger than
-    ``maxPartitionBytes`` are range-split by the scan itself, and at cluster
-    scale the scan has >= defaultParallelism splits — so on the 100 TB path
-    this is a no-op branch and no shuffle is added."""
+    on one core). Plan-side check only: the planned partition count runs
+    no job. Files larger than ``maxPartitionBytes`` are range-split by the
+    scan itself, and at cluster scale the scan has >= defaultParallelism
+    splits — so on the 100 TB path this is a no-op branch and no shuffle is
+    added. The frame must be a batch frame on a classic session (its
+    ``rdd`` is read)."""
     sc = vectors.sparkSession.sparkContext
     target = sc.defaultParallelism
-    try:
-        # Planned partition count, not file count: Spark packs many small
-        # files into few splits (openCostInBytes/maxSplitBytes), so a
-        # file-count proxy under-detects the 1-partition regime — and large
-        # files are range-split, so it over-detects too (ADVICE r3).
-        # getNumPartitions only runs physical planning; no job is launched.
-        n_parts = vectors.rdd.getNumPartitions()
-    except Exception:  # unplannable-to-RDD edge: leave the plan alone
-        return vectors
+    # Planned partition count, not file count: Spark packs many small files
+    # into few splits (openCostInBytes/maxSplitBytes), so a file-count proxy
+    # under-detects the 1-partition regime — and large files are
+    # range-split, so it over-detects too. getNumPartitions only runs
+    # physical planning; no job is launched.
+    n_parts = vectors.rdd.getNumPartitions()
     if 0 < n_parts < target:
         return vectors.repartition(target)
     return vectors

@@ -218,21 +218,19 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay one bucketed write, then every subsequent join on that key is
     map-side. Result-identical to the plain shuffle join (the oracle)."""
     import hashlib
-    import os
-    import tempfile
 
+    from ..scratch import scratch_dir
     from ..sources.writers import write_bucketed_table
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "mpbda_spark_bucketed")
     t_orders, t_cust = f"mpbda_orders_b_{tag}", f"mpbda_customer_b_{tag}"
     write_bucketed_table(
         load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-        t_orders, "o_custkey", 8, os.path.join(base, t_orders),
+        t_orders, "o_custkey", 8, scratch_dir(t_orders),
     )
     write_bucketed_table(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        t_cust, "c_custkey", 8, os.path.join(base, t_cust),
+        t_cust, "c_custkey", 8, scratch_dir(t_cust),
     )
     o, c = spark.table(t_orders), spark.table(t_cust)
     return (

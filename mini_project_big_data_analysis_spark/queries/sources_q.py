@@ -219,19 +219,19 @@ def snk_upsert_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched — proving the merge is idempotent under key collision and
     rewrites only the affected bucket directories (partition-scoped, never
     a full-table rewrite)."""
-    from ..sources.writers import upsert_parquet
+    from ..sources.writers import ParquetBucketStore, upsert_into
 
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    path = scratch_dir("upsert")
-    upsert_parquet(spark, path, base, keys=["o_orderkey"])
+    store = ParquetBucketStore(spark, scratch_dir("upsert"))
+    upsert_into(store, base, keys=["o_orderkey"])
     updates = base.filter(F.col("o_custkey") < 50).withColumn(
         "o_orderpriority", F.lit("UPDATED")
     )
-    upsert_parquet(spark, path, updates, keys=["o_orderkey"])  # delivery 1
-    merged = upsert_parquet(spark, path, updates, keys=["o_orderkey"])  # replay
-    return merged.select(
+    upsert_into(store, updates, keys=["o_orderkey"])  # delivery 1
+    upsert_into(store, updates, keys=["o_orderkey"])  # replay
+    return store.read_all().select(
         "o_orderkey",
         "o_custkey",
         F.round("o_totalprice", 6).alias("total_r"),

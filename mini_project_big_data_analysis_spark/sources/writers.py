@@ -68,6 +68,13 @@ def write_bucketed_table(
     writer.bucketBy(n_buckets, bucket_col).sortBy(bucket_col).saveAsTable(table)
 
 
+#: Hash buckets of every keyed table: ``__bucket = pmod(xxhash64(keys),
+#: N_BUCKETS)``. A property of the table, not of one MERGE — merging with a
+#: different count would hash existing keys into other buckets and store
+#: them twice.
+N_BUCKETS = 32
+
+
 class KeyedTableStore:
     """The minimal connector surface the keyed-MERGE algorithm needs.
 
@@ -94,10 +101,11 @@ class KeyedTableStore:
         Returned frame carries ``__bucket``."""
         raise NotImplementedError
 
-    def overwrite_buckets(self, merged: DataFrame) -> None:
-        """Replace exactly the buckets present in ``merged`` (dynamic
-        partition overwrite / transactional bulk replace); untouched
-        buckets keep their data."""
+    def overwrite_buckets(self, merged: DataFrame, buckets: list[int]) -> None:
+        """Replace exactly ``buckets`` with the rows of ``merged``; other
+        buckets keep their data. ``buckets`` is non-empty and every bucket
+        in it holds at least one row of ``merged`` (``upsert_into`` passes
+        the buckets of its update batch, whose rows are all in ``merged``)."""
         raise NotImplementedError
 
     def read_all(self) -> DataFrame:
@@ -108,15 +116,31 @@ class KeyedTableStore:
 class ParquetBucketStore(KeyedTableStore):
     """Bucket-partitioned parquet implementation (the testable default).
 
-    Empty-table robustness: a zero-row ``initialize``/``overwrite_buckets``
-    writes a directory with no parquet files (just ``_SUCCESS``), and a
-    schema-inferring read of that directory fails with
-    ``UNABLE_TO_INFER_SCHEMA``. At 100 TB an empty-after-filter update
-    stream is routine, so every write also records the schema in a tiny
-    ``_schema.json`` sidecar — the table-format "log", reduced to the one
-    field this store needs — and reads apply it explicitly: an empty table
-    scans as an empty DataFrame instead of failing the pipeline, from ANY
-    store object (not just the one that wrote it).
+    Empty-table robustness: a zero-row ``initialize`` writes a directory
+    with no parquet files (just ``_SUCCESS``), and a schema-inferring read
+    of that directory fails with ``UNABLE_TO_INFER_SCHEMA``. So every write
+    also records the schema in a tiny ``_schema.json`` sidecar — the
+    table-format "log", reduced to the one field this store needs — and
+    every scan reads it and applies it: an empty table scans as an empty
+    DataFrame, from any store object over the path.
+
+    Crash consistency (single writer, no concurrent reader during
+    ``overwrite_buckets``, like the non-transactional parquet layout
+    generally):
+
+    - the sidecar is staged and renamed into place, so a reader never sees
+      a partial one (the local FS refuses a rename onto an existing file,
+      so the old sidecar is deleted first: a microsecond window without
+      one);
+    - a MERGE writes the sidecar BEFORE swapping data, and the swap never
+      deletes root files: a crash mid-swap leaves the new schema over
+      partly old data, which still scans (parquet fills absent columns
+      with NULL);
+    - the merged buckets are staged in a sibling directory and each
+      ``__bucket=<b>`` dir is renamed into place; between the delete of the
+      live dir and the rename that bucket reads as empty, never stale;
+    - the staging dir is deleted only after every bucket swapped; a failed
+      rename raises ``IOError`` naming the staging dir, the recovery copy.
     """
 
     _SCHEMA_FILE = "_schema.json"
@@ -124,12 +148,6 @@ class ParquetBucketStore(KeyedTableStore):
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        # In-object cache of the sidecar, keyed by its mtime: a SECOND store
-        # object pointed at the same path may overwrite_buckets with an
-        # evolved schema, and an mtime-less cache would keep serving the
-        # stale one forever (ADVICE r9).
-        self._schema = None
-        self._schema_mtime = None
 
     def _fs(self):
         jvm = self.spark.sparkContext._jvm
@@ -143,12 +161,6 @@ class ParquetBucketStore(KeyedTableStore):
         return bool(fs.exists(hpath))
 
     def _write_schema_sidecar(self, df: DataFrame) -> None:
-        # Stage-and-rename: a reader must never observe a partial sidecar.
-        # Rename is atomic on HDFS and on the local FS within a directory;
-        # the delete-before-rename (local FS refuses rename-onto-existing)
-        # leaves a window of MISSING sidecar that is microseconds, vs the
-        # whole parquet job if the sidecar were simply written last
-        # (ADVICE r9).
         jvm, _, fs = self._fs()
         spath = jvm.org.apache.hadoop.fs.Path(self.path, self._SCHEMA_FILE)
         tmp = jvm.org.apache.hadoop.fs.Path(self.path, self._SCHEMA_FILE + ".tmp")
@@ -159,36 +171,23 @@ class ParquetBucketStore(KeyedTableStore):
             out.close()
         if fs.exists(spath):
             fs.delete(spath, False)
-        # Hadoop's FileSystem.rename reports failure by RETURNING false, not
-        # by raising; unchecked, a failed rename would leave no sidecar and
-        # surface later as a raw FileNotFoundException far from the cause
-        # (ADVICE r10).
+        # Hadoop's rename reports failure by returning false, not raising
         if not fs.rename(tmp, spath):
             raise IOError(
                 f"failed to rename schema sidecar {tmp} -> {spath}; "
                 "the table is left without a committed sidecar"
             )
-        self._schema = df.schema
-        self._schema_mtime = self._sidecar_stamp(fs, spath)
-
-    @staticmethod
-    def _sidecar_stamp(fs, spath):
-        # (mtime, length): mtime alone has millisecond granularity — two
-        # evolutions inside one tick would alias; the length breaks the tie
-        # for any realistic schema change.
-        st = fs.getFileStatus(spath)
-        return (st.getModificationTime(), st.getLen())
 
     def _read_schema_sidecar(self):
+        """The table's schema from ``_schema.json``, or None if absent."""
+        import json
+
         from pyspark.sql.types import StructType
 
         jvm, _, fs = self._fs()
         spath = jvm.org.apache.hadoop.fs.Path(self.path, self._SCHEMA_FILE)
         if not fs.exists(spath):
-            return self._schema  # pre-sidecar table written by an old layout
-        mtime = self._sidecar_stamp(fs, spath)
-        if self._schema is not None and mtime == self._schema_mtime:
-            return self._schema
+            return None
         stream = fs.open(spath)
         try:
             reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
@@ -199,11 +198,7 @@ class ParquetBucketStore(KeyedTableStore):
                 line = reader.readLine()
         finally:
             stream.close()
-        import json as _json
-
-        self._schema = StructType.fromJson(_json.loads("".join(lines)))
-        self._schema_mtime = mtime
-        return self._schema
+        return StructType.fromJson(json.loads("".join(lines)))
 
     def initialize(self, bucketed: DataFrame) -> None:
         bucketed.write.partitionBy("__bucket").parquet(self.path)
@@ -220,61 +215,27 @@ class ParquetBucketStore(KeyedTableStore):
         # partition pruning: only the affected bucket directories are listed
         return self._scan().filter(F.col("__bucket").isin(bucket_ids))
 
-    def overwrite_buckets(self, merged: DataFrame) -> None:
-        # Stage the merged buckets in a SIBLING directory, then swap each
-        # touched __bucket dir into place with filesystem renames (a
-        # transactional table format stages via its log — this models
-        # that). Because the stage target is a different directory, the
-        # merged plan can read the live bucket dirs while writing — the
-        # round-15 shape routed around Spark's in-place read+overwrite
-        # refusal with an eager localCheckpoint instead, which materialized
-        # every merged row TWICE (checkpoint blocks, then the write) and
-        # was one whole extra pass per MERGE (round-16 measurement:
-        # snk_upsert_write runs three upserts, each paying it).
-        # Sidecar FIRST: the rename swap replaces only the touched __bucket
-        # directories and never deletes root files, so writing the
-        # (possibly evolved) schema before the data commit means there is
-        # no window where the table is sidecar-less — a crash mid-swap
-        # leaves the new schema over partially-old data, which still scans
-        # (parquet fills absent columns with NULL). Writing it AFTER left a
-        # data-committed/old-schema window as long as the parquet job
-        # (ADVICE r9). The flip side (ADVICE r10): a CONCURRENT reader
-        # during the swap applies the evolved schema to pre-overwrite data
-        # — an added column reads all-NULL, a type change can fail its
-        # scan. Like the non-transactional parquet layout generally, this
-        # store assumes single-writer / no-concurrent-reader during
-        # overwrite_buckets; both crash-consistency choices favor the
-        # recovery path, not live concurrency.
+    def overwrite_buckets(self, merged: DataFrame, buckets: list[int]) -> None:
+        # Staging in a sibling directory lets the merged plan read the live
+        # bucket dirs while it writes (class docstring: crash consistency).
         self._write_schema_sidecar(merged)
         staging = f"{self.path}__staging_{uuid.uuid4().hex[:8]}"
         merged.write.partitionBy("__bucket").parquet(staging)
         jvm, hroot, fs = self._fs()
-        spath = jvm.org.apache.hadoop.fs.Path(staging)
-        # Failure policy (ADVICE r16, medium): staging is deleted ONLY after
-        # every touched bucket swapped cleanly. The previous finally-delete
-        # destroyed the staged copy on a mid-loop rename failure — and the
-        # live dir was already deleted, so the bucket's merged data had NO
-        # surviving copy. Now a failed swap keeps staging and names it in
-        # the error for manual recovery (rename the staged __bucket= dirs
-        # into place). Crash window, stated precisely: between delete(dst)
-        # and rename, that bucket directory is MISSING entirely — a reader
-        # sees zero rows for it, not stale rows; the staged dir is the
-        # recovery source either way.
-        for st in fs.listStatus(spath):
-            name = st.getPath().getName()
-            if not name.startswith("__bucket="):
-                continue  # _SUCCESS etc. stay in staging
-            dst = jvm.org.apache.hadoop.fs.Path(hroot, name)
+        Path = jvm.org.apache.hadoop.fs.Path
+        for b in buckets:
+            src = Path(staging, f"__bucket={b}")
+            dst = Path(hroot, f"__bucket={b}")
             if fs.exists(dst):
                 fs.delete(dst, True)
-            if not fs.rename(st.getPath(), dst):
+            if not fs.rename(src, dst):
                 raise IOError(
-                    f"failed to swap bucket dir {st.getPath()} -> {dst}; "
+                    f"failed to swap bucket dir {src} -> {dst}; "
                     "the table may hold a partially-swapped MERGE (this "
                     f"bucket is currently missing); staged data kept at "
                     f"{staging} for manual recovery"
                 )
-        fs.delete(spath, True)
+        fs.delete(Path(staging), True)
 
     def read_all(self) -> DataFrame:
         return self._scan().drop("__bucket")
@@ -380,15 +341,13 @@ class JdbcKeyedStore(KeyedTableStore):
             .filter(F.col("__bucket").isin(bucket_ids))
         )
 
-    def overwrite_buckets(self, merged: DataFrame) -> None:
+    def overwrite_buckets(self, merged: DataFrame, buckets: list[int]) -> None:
         # merged was read FROM the buckets we are about to delete; pin its
         # rows before mutating the table (the lazy JDBC scan would
         # otherwise re-read post-delete state during the append).
         merged = merged.localCheckpoint(eager=True)
-        touched = [int(r[0]) for r in merged.select("__bucket").distinct().collect()]
-        if touched:  # bounded by n_buckets, same as ParquetBucketStore
-            ids = ", ".join(str(b) for b in sorted(touched))
-            self._execute(f'DELETE FROM {self.table} WHERE "__bucket" IN ({ids})')
+        ids = ", ".join(str(b) for b in sorted(buckets))
+        self._execute(f'DELETE FROM {self.table} WHERE "__bucket" IN ({ids})')
         self._options(merged.write).mode("append").save()
 
     def read_all(self) -> DataFrame:
@@ -482,7 +441,7 @@ class DocumentKeyedStore(KeyedTableStore):
         # path — ``MongoClient(...)[db][coll]`` handed in, ``exists()``
         # True, ``initialize`` never runs): recover the schema from storage
         # the way the parquet/JDBC backends do, by inferring over a bounded
-        # sample of documents (ADVICE r7). Callers with a known contract
+        # sample of documents. Callers with a known contract
         # pass ``schema`` to the constructor instead.
         if self._schema is not None:
             return
@@ -494,7 +453,7 @@ class DocumentKeyedStore(KeyedTableStore):
         # Live-Mongo documents carry '_id' (an ObjectId insert_many added —
         # not a row field and not Spark-mappable): project it out server-side
         # where the client supports projections, strip client-side where the
-        # stand-in's query-only find() does not (ADVICE r8).
+        # stand-in's query-only find() does not.
         try:
             cursor = self.collection.find({}, {"_id": 0})
         except TypeError:  # InMemoryDocumentCollection: find(query) only
@@ -529,7 +488,7 @@ class DocumentKeyedStore(KeyedTableStore):
             # Name the widened fields NOW: if later documents carry
             # non-string values for one of these, the scan fails far from
             # this inference — the warning is the breadcrumb back to the
-            # cause, and schema= is the fix (ADVICE r9).
+            # cause, and schema= is the fix.
             import warnings
 
             warnings.warn(
@@ -584,47 +543,39 @@ class DocumentKeyedStore(KeyedTableStore):
             self.collection.find({"__bucket": {"$in": sorted(bucket_ids)}})
         )
 
-    def overwrite_buckets(self, merged: DataFrame) -> None:
+    def overwrite_buckets(self, merged: DataFrame, buckets: list[int]) -> None:
         # merged's lineage includes read_buckets of the very buckets being
         # replaced; pin it before mutating (with the in-memory client the
         # createDataFrame rows are already copies, but a lazy connector
-        # read would re-execute post-delete — same discipline as the
-        # parquet/JDBC stores)
+        # read would re-execute post-delete — same discipline as the JDBC
+        # store)
         merged = merged.localCheckpoint(eager=True)
-        touched = [
-            int(r[0]) for r in merged.select("__bucket").distinct().collect()
-        ]
-        if touched:  # bounded by n_buckets
-            self.collection.delete_many({"__bucket": {"$in": sorted(touched)}})
+        self.collection.delete_many({"__bucket": {"$in": sorted(buckets)}})
         self._insert_frame(merged)
 
     def read_all(self) -> DataFrame:
         return self._frame(self.collection.find({})).drop("__bucket")
 
 
-def upsert_into(
-    store: KeyedTableStore,
-    updates: DataFrame,
-    keys: list[str],
-    n_buckets: int = 32,
-) -> DataFrame:
+def upsert_into(store: KeyedTableStore, updates: DataFrame, keys: list[str]) -> None:
     """Keyed MERGE/upsert through a :class:`KeyedTableStore` (the reference's
     MongoDB ``insert_one``-by-``_id`` semantics, consumer.py:78, as a bulk
     operator): incoming rows REPLACE existing rows with matching keys,
     others append. Re-delivering the same batch is a no-op — the sink is
     idempotent under key collision, i.e. effectively-exactly-once for
-    at-least-once inputs.
+    at-least-once inputs. Read the table back with ``store.read_all()``.
 
     Scale shape: the table is laid out by a hash bucket of the key, so a
     MERGE touches only the buckets its update keys land in — never a
     full-table rewrite:
 
-    1. updates get ``__bucket = pmod(xxhash64(keys), n_buckets)`` (row-local);
-    2. existing rows are read pruned to the affected buckets only
-       (``store.read_buckets`` — at most ``n_buckets`` driver-side ints);
-    3. survivors = affected existing rows anti-joined against update keys —
+    1. updates get ``__bucket = pmod(xxhash64(keys), N_BUCKETS)`` (row-local);
+    2. the affected buckets (at most ``N_BUCKETS`` driver-side ints) are
+       collected once; an empty batch stops here;
+    3. existing rows are read pruned to those buckets (``store.read_buckets``);
+    4. survivors = affected existing rows anti-joined against update keys —
        a shuffle of the affected buckets only;
-    4. survivors ∪ updates replace ONLY those buckets
+    5. survivors ∪ updates replace ONLY those buckets
        (``store.overwrite_buckets``; untouched buckets keep their data).
 
     A table format with a transaction log (Delta/Iceberg MERGE) adds ACID
@@ -637,33 +588,21 @@ def upsert_into(
     anti-join removes only *existing* rows). Dedupe upstream
     (``dropDuplicates(keys)``) when the source can replay within a batch.
     """
-    bucket = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+    bucket = F.pmod(F.xxhash64(*keys), F.lit(N_BUCKETS)).cast("int")
     bucketed = updates.withColumn("__bucket", bucket)
     if not store.exists():
         store.initialize(bucketed)
-        return store.read_all()
+        return
 
-    affected = [r[0] for r in bucketed.select("__bucket").distinct().collect()]
+    affected = sorted(r[0] for r in bucketed.select("__bucket").distinct().collect())
+    if not affected:
+        return
     existing = store.read_buckets(affected)
     survivors = existing.join(
         updates.select(*keys).distinct(), on=keys, how="left_anti"
     )
     merged = survivors.select(*updates.columns, "__bucket").unionByName(bucketed)
-    store.overwrite_buckets(merged)
-    return store.read_all()
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    n_buckets: int = 32,
-) -> DataFrame:
-    """``upsert_into`` against the bucket-partitioned parquet store — the
-    default sink; see :func:`upsert_into` for the MERGE semantics and the
-    100 TB layout rationale."""
-    return upsert_into(ParquetBucketStore(spark, path), updates, keys, n_buckets)
+    store.overwrite_buckets(merged, affected)
 
 
 def compact_files(

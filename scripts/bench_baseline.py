@@ -1,6 +1,7 @@
 """Fill BASELINE.md: time every oracle-checked query in DuckDB and in Spark
-at a given SF, median of 3 warm runs, and print a markdown table. The Spark
-side runs each id through ``record.run_query`` (GC, then noop sink).
+at a given SF, and print a markdown table. Per engine and id: one warm run
+(discarded), then the mean of 2 timed runs. The Spark side runs each id
+through ``record.run_query`` (GC, then noop sink).
 
 Usage: python scripts/bench_baseline.py [sf_dir] [query_id ...]
 """
@@ -20,9 +21,9 @@ from mini_project_big_data_analysis_spark.record import run_query  # noqa: E402
 from mini_project_big_data_analysis_spark.session import get_spark  # noqa: E402
 
 
-def median3(fn) -> float:
+def warm_mean2(fn) -> float:
     fn()  # warm (discarded)
-    return statistics.median(fn() for _ in range(2))
+    return statistics.median(fn() for _ in range(2))  # median of 2 = mean
 
 
 def main() -> int:
@@ -43,8 +44,8 @@ def main() -> int:
 
         # rows-only ids (oracle=None) get a Spark-side baseline row too —
         # the 2× regression guard must cover every registered id.
-        d = median3(duck_run) if q.oracle is not None else None
-        s = median3(lambda: run_query(spark, qid, sf_dir)["wall_s"])
+        d = warm_mean2(duck_run) if q.oracle is not None else None
+        s = warm_mean2(lambda: run_query(spark, qid, sf_dir)["wall_s"])
         # release any cache a query leaves behind so pinned blocks don't
         # distort the remaining entries
         spark.catalog.clearCache()

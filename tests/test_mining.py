@@ -45,16 +45,15 @@ def test_pagerank_mass_conserved_and_uniform_baseline(spark, sf_dir):
     assert min(r.rank_ppm for r in rows) >= floor_ppm * 0.999
 
 
-def test_pmi_empty_and_single_token_docs(spark):
+def test_pmi_empty_and_single_token_docs(spark, tmp_path):
     """Docs with <2 tokens produce no bigrams (ANSI mode: slice/zip must not
     throw on empty arrays); a planted repeated pair dominates PMI."""
     from mini_project_big_data_analysis_spark.queries.ext_mining_q import (
         ext_pmi_collocations,
     )
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="pmi_docs_")
+    d = str(tmp_path)
     corpus = (
         [(i, "alpha beta", "en", "s", 10) for i in range(5)]
         + [(100, "", "en", "s", 0), (101, "solo", "en", "s", 4)]

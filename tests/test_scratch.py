@@ -24,7 +24,7 @@ def tmp_scratch(tmp_path, monkeypatch):
     return tmp_path
 
 
-# one id per streaming sink kind, plus two batch sinks
+# one id per streaming sink kind, two batch sinks and the bucketed tables
 SCRATCH_IDS = [
     "stream_tumbling_agg",  # memory sink
     "stream_clean_sink",  # parquet sink from DDL
@@ -32,6 +32,7 @@ SCRATCH_IDS = [
     "stream_multibatch_agg",  # arrival files
     "snk_append_write",
     "snk_compact_small_files",
+    "join_bucketed",  # saveAsTable locations
 ]
 
 

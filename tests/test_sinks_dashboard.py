@@ -5,18 +5,8 @@ fixture-scale ANN recall pins."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 import pyspark.sql.functions as F
-
-from mini_project_big_data_analysis_spark.sources.writers import upsert_parquet
-
-
-def _tmp(name: str) -> str:
-    return os.path.join(tempfile.gettempdir(), "mpbda_tests", f"{name}_{uuid.uuid4().hex}")
-
-
 import pytest
 
 
@@ -59,17 +49,61 @@ def test_upsert_replaces_matched_appends_unmatched_idempotently(spark, tmp_path,
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], "k long, s string, v double"
     )
-    upsert_into(store, base, keys=["k"], n_buckets=4)
+    upsert_into(store, base, keys=["k"])
 
     updates = spark.createDataFrame(
         [(2, "B", 20.0), (4, "d", 4.0)], "k long, s string, v double"
     )
     expected = {(1, "a", 1.0), (2, "B", 20.0), (3, "c", 3.0), (4, "d", 4.0)}
-    once = upsert_into(store, updates, keys=["k"], n_buckets=4)
+    upsert_into(store, updates, keys=["k"])
+    once = store.read_all()
     assert {tuple(r) for r in once.select("k", "s", "v").collect()} == expected
     # double delivery (at-least-once replay) is a no-op
-    twice = upsert_into(store, updates, keys=["k"], n_buckets=4)
+    upsert_into(store, updates, keys=["k"])
+    twice = store.read_all()
     assert {tuple(r) for r in twice.select("k", "s", "v").collect()} == expected
+
+
+@pytest.mark.parametrize("kind", ["parquet", "jdbc", "document"])
+def test_upsert_of_an_empty_batch_ends_at_the_bucket_collect(
+    spark, tmp_path, kind, monkeypatch
+):
+    """A zero-row batch stops the MERGE at the affected-bucket collect, on
+    every backend: the table reads the same, no job starts after that one
+    collect, and the parquet store does not rewrite its schema sidecar."""
+    from perfbench.spans import JobCounter
+
+    from mini_project_big_data_analysis_spark.sources.writers import upsert_into
+
+    store = _make_store(kind, spark, tmp_path)
+    base = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0)], "k long, s string, v double"
+    )
+    upsert_into(store, base, keys=["k"])
+    before = {tuple(r) for r in store.read_all().collect()}
+    sidecar = tmp_path / "upsert_pq" / "_schema.json"
+    inode = sidecar.stat().st_ino if kind == "parquet" else None
+
+    jobs = JobCounter(spark)
+    frame_cls = type(base)
+    collect = frame_cls.collect
+    next_job_after_collect = []
+
+    def counted_collect(self):
+        rows = collect(self)
+        next_job_after_collect.append(jobs.next_job())
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", counted_collect)
+    upsert_into(store, base.filter(F.col("k") < 0), keys=["k"])
+    end = jobs.next_job()
+    monkeypatch.undo()
+
+    assert len(next_job_after_collect) == 1, "only the affected-bucket collect"
+    assert end == next_job_after_collect[0], "a job started after the collect"
+    assert {tuple(r) for r in store.read_all().collect()} == before
+    if kind == "parquet":
+        assert sidecar.stat().st_ino == inode, "the sidecar was rewritten"
 
 
 def test_document_store_recovers_schema_from_populated_collection(spark):
@@ -90,7 +124,7 @@ def test_document_store_recovers_schema_from_populated_collection(spark):
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k long, s string, v double"
     )
-    upsert_into(seed, base, keys=["k"], n_buckets=4)
+    upsert_into(seed, base, keys=["k"])
 
     # fresh store over the live collection: no initialize, schema inferred
     fresh = DocumentKeyedStore(spark, coll)
@@ -99,7 +133,8 @@ def test_document_store_recovers_schema_from_populated_collection(spark):
     assert got == {(1, "a", 1.0), (2, "b", 2.0)}
     # and a MERGE through the fresh store works end-to-end
     upd = spark.createDataFrame([(2, "B", 20.0)], "k long, s string, v double")
-    merged = upsert_into(fresh, upd, keys=["k"], n_buckets=4)
+    upsert_into(fresh, upd, keys=["k"])
+    merged = fresh.read_all()
     assert {tuple(r) for r in merged.select("k", "s", "v").collect()} == {
         (1, "a", 1.0),
         (2, "B", 20.0),
@@ -208,13 +243,13 @@ def test_document_store_merge_is_shard_key_pruned(spark):
     base = spark.createDataFrame(
         [(i, float(i)) for i in range(40)], "k long, v double"
     )
-    upsert_into(store, base, keys=["k"], n_buckets=8)
+    upsert_into(store, base, keys=["k"])
     all_buckets = {d["__bucket"] for d in coll.docs}
     assert len(all_buckets) > 2  # the fixture really spans buckets
 
     coll.ops.clear()
     updates = spark.createDataFrame([(7, 700.0), (99, 99.0)], "k long, v double")
-    upsert_into(store, updates, keys=["k"], n_buckets=8)
+    upsert_into(store, updates, keys=["k"])
 
     first_write = next(
         i for i, (op, _) in enumerate(coll.ops) if op in ("delete_many", "insert_many")
@@ -243,12 +278,18 @@ def test_document_store_merge_is_shard_key_pruned(spark):
     assert len(final) == 41
 
 
-def test_upsert_rewrites_only_affected_buckets(spark):
-    path = _tmp("upsert_scoped")
+def test_upsert_rewrites_only_affected_buckets(spark, tmp_path):
+    from mini_project_big_data_analysis_spark.sources.writers import (
+        ParquetBucketStore,
+        upsert_into,
+    )
+
+    path = str(tmp_path / "upsert_scoped")
+    store = ParquetBucketStore(spark, path)
     base = spark.createDataFrame(
         [(i, float(i)) for i in range(40)], "k long, v double"
     )
-    upsert_parquet(spark, path, base, keys=["k"], n_buckets=8)
+    upsert_into(store, base, keys=["k"])
 
     def files_per_bucket() -> dict[str, set[str]]:
         out: dict[str, set[str]] = {}
@@ -260,7 +301,7 @@ def test_upsert_rewrites_only_affected_buckets(spark):
     before = files_per_bucket()
     assert len(before) > 1  # multiple bucket directories exist
     updates = spark.createDataFrame([(7, 700.0)], "k long, v double")
-    upsert_parquet(spark, path, updates, keys=["k"], n_buckets=8)
+    upsert_into(store, updates, keys=["k"])
     after = files_per_bucket()
     changed = {b for b in before if after.get(b) != before[b]}
     # exactly the single bucket directory owning k=7 was rewritten
@@ -480,9 +521,11 @@ class _FakeStore:
         schema = "user_id long, event_type string, value double, __bucket int"
         return self.spark.createDataFrame(rows, schema)
 
-    def overwrite_buckets(self, merged):
+    def overwrite_buckets(self, merged, buckets):
         rows = merged.collect()
         touched = {r["__bucket"] for r in rows}
+        # upsert_into's bucket set is exactly the buckets of the merged rows
+        assert sorted(buckets) == sorted(touched)
         self.overwritten_bucket_sets.append(touched)
         for b in touched:
             self.buckets[b] = []
@@ -503,8 +546,8 @@ def test_upsert_into_fake_store_merges_and_scopes_io(spark):
         [(i, "click", float(i)) for i in range(40)], schema
     )
     store = _FakeStore(spark)
-    out1 = upsert_into(store, first, keys=["user_id"], n_buckets=8)
-    assert out1.count() == 40
+    upsert_into(store, first, keys=["user_id"])
+    assert store.read_all().count() == 40
 
     # second delivery: 5 replaced keys + 3 new keys
     second = spark.createDataFrame(
@@ -512,7 +555,8 @@ def test_upsert_into_fake_store_merges_and_scopes_io(spark):
         + [(100 + i, "view", float(i)) for i in range(3)],
         schema,
     )
-    out2 = upsert_into(store, second, keys=["user_id"], n_buckets=8)
+    upsert_into(store, second, keys=["user_id"])
+    out2 = store.read_all()
     rows = {r.user_id: r for r in out2.collect()}
     assert len(rows) == 43
     assert rows[0].value == 100.0 and rows[4].value == 104.0  # replaced
@@ -526,7 +570,8 @@ def test_upsert_into_fake_store_merges_and_scopes_io(spark):
     assert len(touched) <= 8
 
     # idempotence under replay: re-delivering the same batch changes nothing
-    out3 = upsert_into(store, second, keys=["user_id"], n_buckets=8)
+    upsert_into(store, second, keys=["user_id"])
+    out3 = store.read_all()
     assert sorted(map(tuple, out3.collect())) == sorted(map(tuple, out2.collect()))
 
 
@@ -573,10 +618,10 @@ def test_snapshot_crash_invisibility(spark, sf_dir, tmp_path):
 def test_parquet_sidecar_schema_evolution_visible_across_store_instances(
     spark, tmp_path
 ):
-    """ADVICE r9: the sidecar schema cache must invalidate when ANOTHER
-    store object evolves the table — an mtime-less in-object cache kept
-    serving the pre-evolution schema forever, silently dropping the new
-    column from every read through the stale instance."""
+    """A store object that already read the table sees the schema ANOTHER
+    store object evolved it to: every scan reads the sidecar, so no
+    instance keeps serving the pre-evolution schema (which would silently
+    drop the new column from every read through it)."""
     from mini_project_big_data_analysis_spark.sources.writers import (
         ParquetBucketStore,
     )
@@ -598,7 +643,7 @@ def test_parquet_sidecar_schema_evolution_visible_across_store_instances(
         [(1, "a", 9.9, 0), (2, "b", 8.8, 1)],
         "k long, s string, extra double, __bucket int",
     )
-    evolver.overwrite_buckets(v2)
+    evolver.overwrite_buckets(v2, [0, 1])
 
     # the stale-cached reader must see the evolved schema, not v1's
     got = reader.read_all()
@@ -643,14 +688,15 @@ def test_document_store_id_projection_is_load_bearing(spark):
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k long, s string, v double"
     )
-    upsert_into(seed, base, keys=["k"], n_buckets=4)
+    upsert_into(seed, base, keys=["k"])
     assert all("_id" in d for d in coll.docs), "stand-in failed to inject _id"
 
     # fresh store over the live collection: schema inference runs against
     # documents that REALLY carry ObjectId-like _id debris
     fresh = DocumentKeyedStore(spark, coll)
     upd = spark.createDataFrame([(2, "B", 20.0)], "k long, s string, v double")
-    merged = upsert_into(fresh, upd, keys=["k"], n_buckets=4)
+    upsert_into(fresh, upd, keys=["k"])
+    merged = fresh.read_all()
     assert {tuple(r) for r in merged.select("k", "s", "v").collect()} == {
         (1, "a", 1.0),
         (2, "B", 20.0),
