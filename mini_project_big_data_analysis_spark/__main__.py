@@ -19,11 +19,16 @@ errors too), 1 execution failure. ``--out`` overwrites (the idempotent
 re-run shape every scheduler assumes); ``--show`` prints WITHOUT
 truncation only the first N rows — the result itself is never collected
 to the driver beyond that.
+
+``run`` goes through ``record.run_query`` with the show, write and explain
+as its action, and prints the run's record (without ``result``) as one
+JSON line on stderr.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -104,14 +109,20 @@ def cli_main(argv: list[str] | None = None, spark=None) -> int:
         mod.entry(spark).show(args.show, truncate=False)
         return 0
 
-    df = registry[args.qid].fn(spark, args.sf_dir)
-    if args.explain:
-        df.explain("formatted")
-    if args.out:
-        df.write.mode("overwrite").format(args.format).save(args.out)
-        print(f"wrote {args.out}")
-    else:
-        df.show(args.show, truncate=False)
+    from .record import run_query
+
+    def action(df) -> None:
+        if args.explain:
+            df.explain("formatted")
+        if args.out:
+            df.write.mode("overwrite").format(args.format).save(args.out)
+            print(f"wrote {args.out}")
+        else:
+            df.show(args.show, truncate=False)
+
+    record = run_query(spark, args.qid, args.sf_dir, action=action)
+    del record["result"]
+    print(json.dumps(record), file=sys.stderr)
     return 0
 
 

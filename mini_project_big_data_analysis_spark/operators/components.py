@@ -21,7 +21,6 @@ instead of growing per loop.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame
@@ -38,9 +37,8 @@ from pyspark.sql import functions as F
 #: Components in MapReduce and Beyond"): at 100 TB the gate simply never
 #: fires until contraction has shrunk the quotient below it, and 200k edges
 #: ≈ 3 MB through Arrow — broadcast-sized driver traffic, same class as the
-#: IVF centroid collects. Override with $SPARK_GRAFT_CC_LOCAL_EDGES
-#: (0 disables the local path entirely).
-LOCAL_FINISH_EDGES_DEFAULT = 200_000
+#: IVF centroid collects.
+LOCAL_FINISH_EDGES = 200_000
 
 
 def _local_components(sym: DataFrame) -> DataFrame:
@@ -108,14 +106,6 @@ def bounded_min_relax_local(src, dst, init_ids, init_vals, rounds, hop_weight):
     return ids[mask], val[mask]
 
 
-def local_graph_gate() -> int:
-    """The shared small-graph threshold (edge count) for driver-side
-    finishes: $SPARK_GRAFT_CC_LOCAL_EDGES or the 200k default."""
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", LOCAL_FINISH_EDGES_DEFAULT)
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -127,11 +117,11 @@ def connected_components(
     min node id reachable over undirected edges. Deterministic.
 
     ``local_finish_edges`` gates the driver-side union-find for small edge
-    sets (default $SPARK_GRAFT_CC_LOCAL_EDGES or 200k; 0 keeps every input
-    on the distributed loop).
+    sets (default ``LOCAL_FINISH_EDGES``; 0 keeps every input on the
+    distributed loop).
     """
     if local_finish_edges is None:
-        local_finish_edges = local_graph_gate()
+        local_finish_edges = LOCAL_FINISH_EDGES
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

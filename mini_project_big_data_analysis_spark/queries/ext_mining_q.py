@@ -366,10 +366,10 @@ def ext_graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrays is milliseconds. 3n is the exact raw edge count (three affine
     # legs per doc); past the gate the distributed loop below runs
     # unchanged — that loop IS the 100 TB shape.
-    from ..operators.components import bounded_min_relax_local, local_graph_gate
+    from ..operators.components import LOCAL_FINISH_EDGES, bounded_min_relax_local
 
     n = docs.count()
-    if 0 < 3 * n <= local_graph_gate():
+    if 0 < 3 * n <= LOCAL_FINISH_EDGES:
         import numpy as np
         import pandas as pd
 
@@ -676,10 +676,10 @@ def ext_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # undirected edge set is ≤ 6n, so the gate check stays exact without
     # materializing it. Distinct-ing the symmetrized multiset is unnecessary
     # under min (idempotent), so the local twin skips it.
-    from ..operators.components import bounded_min_relax_local, local_graph_gate
+    from ..operators.components import LOCAL_FINISH_EDGES, bounded_min_relax_local
 
     n = docs.count()
-    if 0 < 6 * n <= local_graph_gate():
+    if 0 < 6 * n <= LOCAL_FINISH_EDGES:
         import numpy as np
         import pandas as pd
 

@@ -8,7 +8,6 @@ at scale the same code writes a partitioned table instead of one directory.
 from __future__ import annotations
 
 import os
-import uuid
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -124,23 +123,25 @@ class ParquetBucketStore(KeyedTableStore):
     every scan reads it and applies it: an empty table scans as an empty
     DataFrame, from any store object over the path.
 
-    Crash consistency (single writer, no concurrent reader during
-    ``overwrite_buckets``, like the non-transactional parquet layout
-    generally):
+    Every write is one ``partitionBy("__bucket")`` parquet write with
+    ``partitionOverwriteMode=dynamic``. Spark's commit protocol writes it
+    under ``.spark-staging-<job>`` in the table root and, only after every
+    task succeeded, deletes and renames into place exactly the
+    ``__bucket=<b>`` dirs the write produced. Crash consistency (single
+    writer, no concurrent reader during a write, like the
+    non-transactional parquet layout generally):
 
+    - a failed write commits nothing: the job's staging dir is deleted and
+      the table reads as before;
     - the sidecar is staged and renamed into place, so a reader never sees
       a partial one (the local FS refuses a rename onto an existing file,
       so the old sidecar is deleted first: a microsecond window without
       one);
-    - a MERGE writes the sidecar BEFORE swapping data, and the swap never
-      deletes root files: a crash mid-swap leaves the new schema over
-      partly old data, which still scans (parquet fills absent columns
-      with NULL);
-    - the merged buckets are staged in a sibling directory and each
-      ``__bucket=<b>`` dir is renamed into place; between the delete of the
-      live dir and the rename that bucket reads as empty, never stale;
-    - the staging dir is deleted only after every bucket swapped; a failed
-      rename raises ``IOError`` naming the staging dir, the recovery copy.
+    - the sidecar is written BEFORE the data and the commit never deletes
+      root files: a crash mid-commit leaves the new schema over partly old
+      data, which still scans (parquet fills absent columns with NULL);
+    - between the delete of a live bucket dir and its rename that bucket
+      reads as empty, never stale.
     """
 
     _SCHEMA_FILE = "_schema.json"
@@ -200,9 +201,19 @@ class ParquetBucketStore(KeyedTableStore):
             stream.close()
         return StructType.fromJson(json.loads("".join(lines)))
 
+    def _write(self, df: DataFrame) -> None:
+        # the merged plan may read the bucket dirs it replaces: the commit
+        # renames them only after every task has finished reading
+        self._write_schema_sidecar(df)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket")
+            .parquet(self.path)
+        )
+
     def initialize(self, bucketed: DataFrame) -> None:
-        bucketed.write.partitionBy("__bucket").parquet(self.path)
-        self._write_schema_sidecar(bucketed)
+        self._write(bucketed)
 
     def _scan(self) -> DataFrame:
         reader = self.spark.read
@@ -216,26 +227,9 @@ class ParquetBucketStore(KeyedTableStore):
         return self._scan().filter(F.col("__bucket").isin(bucket_ids))
 
     def overwrite_buckets(self, merged: DataFrame, buckets: list[int]) -> None:
-        # Staging in a sibling directory lets the merged plan read the live
-        # bucket dirs while it writes (class docstring: crash consistency).
-        self._write_schema_sidecar(merged)
-        staging = f"{self.path}__staging_{uuid.uuid4().hex[:8]}"
-        merged.write.partitionBy("__bucket").parquet(staging)
-        jvm, hroot, fs = self._fs()
-        Path = jvm.org.apache.hadoop.fs.Path
-        for b in buckets:
-            src = Path(staging, f"__bucket={b}")
-            dst = Path(hroot, f"__bucket={b}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"failed to swap bucket dir {src} -> {dst}; "
-                    "the table may hold a partially-swapped MERGE (this "
-                    f"bucket is currently missing); staged data kept at "
-                    f"{staging} for manual recovery"
-                )
-        fs.delete(Path(staging), True)
+        # the write replaces exactly the buckets merged has rows in, which
+        # are ``buckets`` (``KeyedTableStore.overwrite_buckets``)
+        self._write(merged)
 
     def read_all(self) -> DataFrame:
         return self._scan().drop("__bucket")

@@ -2,13 +2,13 @@
 
 The reference's stream is Kafka→clean→Mongo with at-least-once semantics and
 no event-time handling (consumer.py:21-23: auto-commit, latest offsets, no
-watermark — restarts lose or duplicate data). The Spark mapping upgrades
-that for free:
+watermark). Here:
 
-- checkpointed source offsets + idempotent ``foreachBatch`` sinks ⇒
-  effectively-exactly-once;
-- ``withWatermark`` on event time ⇒ bounded state under late/out-of-order
-  arrivals (the reference would silently mis-bucket them);
+- source offsets are checkpointed and every sink is exactly-once on replay:
+  append runs write Spark's parquet file sink, whose ``_spark_metadata`` log
+  records each committed batch and skips a replayed one;
+- ``withWatermark`` on event time bounds state under late/out-of-order
+  arrivals;
 - tumbling-window aggregation replaces the dashboard's full-rescan-every-5-
   minutes recompute loop (app.py:80-84,101) with incremental state.
 
@@ -21,18 +21,17 @@ One run harness. Every runner builds only its DataFrame graph (and, for a
 parquet sink, the sink's DDL) on its own ``_stream_session`` clone of the
 caller's session and hands it to ``_run_stream``, which owns
 everything else: the query name (the run directory's basename), the
-checkpoint at ``run_dir/ck``, ``Trigger.AvailableNow``, the completion wait
-bounded by ``STREAM_BUDGET_S``, the ``PROGRESS_SINK`` capture and the
-read-back. AvailableNow honours ``maxFilesPerTrigger``, so the paced
-multi-batch runners (arrival files from ``_arrival_stream``, one file per
-micro-batch) finish on the same path as the single-batch ones.
+checkpoint at ``run_dir/ck``, ``Trigger.AvailableNow``, the sink, the
+completion wait bounded by ``STREAM_BUDGET_S``, the ``PROGRESS_SINK``
+capture and the read-back. AvailableNow honours ``maxFilesPerTrigger``, so
+the paced multi-batch runners (arrival files from ``_arrival_stream``, one
+file per micro-batch) finish on the same path as the single-batch ones.
 
 Scratch lifetime. Run directories come from ``scratch.scratch_dir`` and live
 under the process's one scratch root, which is removed when the interpreter
 exits (and swept by the next process if this one was killed). Nothing is
 removed per run: the returned frames read their sinks lazily.
 """
-
 from __future__ import annotations
 
 import os
@@ -231,30 +230,16 @@ def _capture_progress(q, spark: SparkSession) -> None:
     PROGRESS_SINK.append({"query_id": str(q.id), "name": q.name, "progress": prog})
 
 
-def _write_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
-    """The idempotent parquet sink step: each micro-batch overwrites its own
-    ``path/batch_id=N`` directory, so a batch replayed after a partial write
-    + restart rewrites the SAME directory instead of appending duplicates."""
-    batch_df.write.mode("overwrite").parquet(os.path.join(path, f"batch_id={batch_id}"))
-
-
 def _read_sink_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    """Read a foreachBatch parquet sink back, guarded against zero batches.
-
-    File sources under ``availableNow`` fire an empty batch 0 even on a
-    zero-row fixture (scripts/empty_sweep.py pins that), but the guarantee
-    is per-source, not universal — a source that yields NO micro-batches
-    never creates the sink directory, and a bare ``read.parquet`` would
-    raise PATH_NOT_FOUND where the pre-round-11 memory sink returned an
-    empty table (ADVICE r11). ``ddl`` declares the sink's written column
-    types, so the empty frame is column- and type-identical to the
-    populated read-back (schema stability holds on both branches). The
-    select also drops the ``batch_id=N`` partition column the idempotent
-    sink layout adds."""
+    """Read a parquet sink back with its declared ``ddl`` schema, or an
+    empty frame of that schema when no batch created ``path``. A file sink
+    is read through its ``_spark_metadata`` log, so only committed files
+    count; the select drops the ``batch_id`` partition column of the
+    fan-out sinks."""
     schema = T.StructType.fromDDL(ddl)
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(path).select(*[f.name for f in schema.fields])
+    return spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
 
 
 def _run_stream(
@@ -275,19 +260,18 @@ def _run_stream(
 
     - ``"memory"``: an in-memory table, returned as ``spark.table(name)``
       — for results bounded by key cardinality, not by data volume;
-    - a DDL string: parquet under ``run_dir/sink``, one ``batch_id=N``
-      directory per micro-batch (``_write_batch``), or the whole directory
-      overwritten per trigger in ``complete`` mode; returned through
-      ``_read_sink_or_empty`` with that DDL;
+    - a DDL string: parquet under ``run_dir/sink``, read back through
+      ``_read_sink_or_empty`` with that DDL. In ``append`` mode this is
+      Spark's file sink, exactly-once through its ``_spark_metadata`` log;
+      the file sink refuses ``complete`` mode, so there each trigger
+      overwrites the whole directory from ``foreachBatch``;
     - a ``foreachBatch`` callable (fan-out, upsert): returns None and the
       caller reads its own output.
 
-    Completion is bounded by ``STREAM_BUDGET_S`` and fails LOUDLY when the
-    budget runs out: an unchecked wait let a caller read a PARTIAL (or
-    empty) sink as the final answer — the silent-wrong-output failure the
-    strong oracles exist to catch, first seen when ``stream_stateful_stats``
-    returned 0 rows at the sf100 tier. Stopping the query on timeout keeps
-    the session reusable for the caller's error handling."""
+    Completion is bounded by ``STREAM_BUDGET_S`` and fails loudly when the
+    budget runs out, so no caller reads a partial sink as the final answer.
+    Stopping the query on timeout keeps the session reusable for the
+    caller's error handling."""
     name = os.path.basename(run_dir)
     path = os.path.join(run_dir, "sink")
     writer = (
@@ -305,9 +289,7 @@ def _run_stream(
             lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(path)
         )
     else:
-        writer = writer.foreachBatch(
-            lambda batch_df, batch_id: _write_batch(batch_df, batch_id, path)
-        )
+        writer = writer.format("parquet").option("path", path)
     q = writer.start()
     if not q.awaitTermination(STREAM_BUDGET_S):
         q.stop()
@@ -515,7 +497,7 @@ def run_tumbling_agg_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     on the driver every trigger — bounded here (one row per (window, type):
     tens of rows for the 16-city weather shape and the fixture event types),
     but at real result cardinality the production form is ``append`` mode
-    (watermark-expired windows only) into foreachBatch/parquet, which keeps
+    (watermark-expired windows only) into the parquet file sink, which keeps
     emission executor-side; the upstream agg/state graph is unchanged.
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
@@ -525,14 +507,13 @@ def run_tumbling_agg_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def run_clean_to_parquet_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consumer's full pipeline (consumer.py:29-78) as Structured
-    Streaming with an idempotent foreachBatch parquet sink: source offsets
-    are checkpointed and each micro-batch lands in its own ``batch_id=N``
-    subdirectory written with ``mode("overwrite")`` — a replayed batch (the
-    at-least-once failure mode after a partial write + restart) rewrites
-    the SAME directory instead of appending duplicates, upgrading the
-    reference's insert_one loop to effectively-exactly-once. Returns a scan
-    of the sink — which must equal the batch-cleaned table (the oracle
-    checks exactly that, and stays equal under replay).
+    Streaming into Spark's parquet file sink: source offsets are
+    checkpointed and the sink's ``_spark_metadata`` log records each
+    committed batch, so a batch replayed after a partial write + restart
+    (the reference's at-least-once failure mode) is skipped instead of
+    appended twice — the reference's insert_one loop made exactly-once.
+    Returns a scan of the sink, which must equal the batch-cleaned table
+    (the oracle checks exactly that).
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
@@ -571,10 +552,8 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.coalesce("n_name", F.lit("unknown")).alias("nation"),
     )
-    # Production sink shape (round 11): batch_id-keyed idempotent parquet
-    # via foreachBatch, like run_clean_to_parquet_availablenow — a memory
-    # sink materializes the whole result driver-side (dev-tool shape) and
-    # caps the runner at driver heap; this one scales with the sink store.
+    # Enriched rows grow with the stream: parquet file sink, not the
+    # memory sink, which holds the whole result in one heap.
     return _run_stream(
         spark,
         enriched,
@@ -591,9 +570,9 @@ def run_fanout_sinks_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     the second write would re-execute the whole batch plan; with it the
     batch computes once however many sinks are added.
 
-    Each sink is independently idempotent (batch_id-keyed overwrite), so a
-    replayed batch rewrites both destinations instead of duplicating
-    either. Returns both sinks' contents tagged by sink id — the STRONG
+    Each sink is independently idempotent: a batch overwrites its own
+    ``batch_id=N`` directory, so a replayed batch rewrites both
+    destinations instead of duplicating either. Returns both sinks' contents tagged by sink id — the STRONG
     oracle checks each equals the batch-cleaned table (a lost or doubled
     batch in EITHER sink breaks the hash)."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
@@ -607,7 +586,9 @@ def run_fanout_sinks_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
         batch_df.persist()
         try:
             for path in paths.values():
-                _write_batch(batch_df, batch_id, path)
+                batch_df.write.mode("overwrite").parquet(
+                    os.path.join(path, f"batch_id={batch_id}")
+                )
         finally:
             batch_df.unpersist()
 
@@ -683,9 +664,8 @@ def run_stream_dedup_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    # Production sink shape (round 11): idempotent batch_id-keyed parquet
-    # instead of the driver-bound memory sink — the dedup STATE is already
-    # partition-distributed; this makes the sink side scale too.
+    # Deduped rows grow with the stream: parquet file sink, not the
+    # memory sink, which holds the whole result in one heap.
     return _run_stream(spark, deduped, run_dir, sink=CLEAN_DDL)
 
 
@@ -843,9 +823,8 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("purchase_time") - F.unix_timestamp("click_time")
         ).alias("gap_s"),
     )
-    # Production sink shape (round 11): join output is DATA-proportional
-    # (pairs, not state-grain), so it lands in batch_id-keyed idempotent
-    # parquet rather than a driver-bound memory sink.
+    # Joined pairs grow with the stream: parquet file sink, not the
+    # memory sink, which holds the whole result in one heap.
     return _run_stream(
         spark,
         joined,
@@ -1013,8 +992,8 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # Production sink shape (round 11): admitted rows are DATA-proportional
-    # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
+    # Admitted rows grow with the stream: parquet file sink, not the
+    # memory sink, which holds the whole result in one heap.
     return _ts_as_string(_run_stream(spark, admitted, run_dir, sink=ARRIVAL_DDL))
 
 
@@ -1170,8 +1149,8 @@ def _tws_dedup_state_api(
         outputMode="append",
         timeMode="none",
     )
-    # Production sink shape (round 11): deduped rows are DATA-proportional
-    # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
+    # Deduped rows grow with the stream: parquet file sink, not the
+    # memory sink, which holds the whole result in one heap.
     return _run_stream(spark, deduped, run_dir, sink=ARRIVAL_DDL)
 
 
@@ -1201,7 +1180,7 @@ def run_sliding_agg_availablenow(
     the state-size multiplier, which is why production slides are kept
     coarse. Complete-mode memory sink for the same reason as
     run_tumbling_agg_availablenow: the result is one row per (window, type),
-    bounded; at real cardinality the append-mode foreachBatch form keeps
+    bounded; at real cardinality the append-mode parquet file sink keeps
     emission executor-side."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
     agg = (
@@ -1246,10 +1225,8 @@ def run_session_agg_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_start", "n_events", "avg_value")
     )
-    # Production sink shape (round 11): complete mode needs a sink that can
-    # replace the whole result per trigger — foreachBatch + whole-directory
-    # overwrite is that sink at scale (a memory sink is the same semantics
-    # materialized on the DRIVER, capping the runner at driver heap).
+    # Sessions grow with the users: a complete-mode parquet sink (each
+    # trigger overwrites the directory), not the memory sink.
     return _run_stream(
         spark,
         agg,

@@ -8,6 +8,8 @@ run/entry reuse the fixture.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from mini_project_big_data_analysis_spark.__main__ import cli_main
@@ -38,7 +40,15 @@ def test_run_shows_rows(spark, capsys):
         ["run", "agg_group_avg", "--sf-dir", SF_DIR, "--show", "3"], spark=spark
     )
     assert rc == 0
-    assert "event_type" in capsys.readouterr().out
+    captured = capsys.readouterr()
+    assert "event_type" in captured.out
+    # the run's record, as record.run_query returns it minus the result
+    record = json.loads(captured.err.strip().splitlines()[-1])
+    assert "result" not in record
+    assert record["jobs"] >= 1 and record["stages"] >= 1
+    assert record["wall_s"] >= record["exec_s"] > 0
+    assert record["stream"] is None
+    assert record["session"]["master"] == spark.sparkContext.master
 
 
 def test_run_writes_parquet(spark, tmp_path, capsys):

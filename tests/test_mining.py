@@ -217,12 +217,14 @@ def test_graph_local_finish_matches_distributed(spark, sf_dir, monkeypatch):
     return exactly the distributed loop's rows for BOTH ids (same reached
     set, same depths/labels) — the two paths differ only in where the
     arithmetic runs."""
+    from mini_project_big_data_analysis_spark.operators import components
     from mini_project_big_data_analysis_spark.queries import all_queries
 
     reg = all_queries()
+    gate = components.LOCAL_FINISH_EDGES
     for qid, key in [("ext_graph_bfs_depth", "dist"), ("ext_graph_communities", "community")]:
-        monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_EDGES", raising=False)
+        monkeypatch.setattr(components, "LOCAL_FINISH_EDGES", gate)
         local = {r.doc_id: r[key] for r in reg[qid].fn(spark, sf_dir).collect()}
-        monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
+        monkeypatch.setattr(components, "LOCAL_FINISH_EDGES", 0)
         dist = {r.doc_id: r[key] for r in reg[qid].fn(spark, sf_dir).collect()}
         assert local == dist, f"{qid}: local finish diverges from the distributed loop"

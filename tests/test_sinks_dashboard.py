@@ -310,6 +310,49 @@ def test_upsert_rewrites_only_affected_buckets(spark, tmp_path):
     assert untouched and all(after[b] == before[b] for b in untouched)
 
 
+def test_failed_merge_write_leaves_the_table_as_it_was(spark, tmp_path):
+    """A MERGE whose merged frame raises while it is written commits
+    nothing: Spark's dynamic-overwrite commit renames bucket dirs only
+    after every task succeeded and deletes its staging dir on abort, so
+    the table reads as before and its root lists no staging dir."""
+    from mini_project_big_data_analysis_spark.sources.writers import (
+        N_BUCKETS,
+        ParquetBucketStore,
+        upsert_into,
+    )
+
+    path = str(tmp_path / "failed_merge")
+    store = ParquetBucketStore(spark, path)
+    upsert_into(
+        store,
+        spark.createDataFrame([(i, f"v{i}") for i in range(40)], "k long, s string"),
+        keys=["k"],
+    )
+    before = store.read_all()
+    rows, schema = sorted(map(tuple, before.collect())), before.schema
+    listing = sorted(os.listdir(path))
+
+    @F.udf("string")
+    def fail_on_seven(k, s):
+        if k == 7:
+            raise ValueError("merged row k=7 cannot be evaluated")
+        return s
+
+    updates = spark.createDataFrame([(i, f"w{i}") for i in range(40)], "k long, s string")
+    bucket = F.pmod(F.xxhash64("k"), F.lit(N_BUCKETS)).cast("int")
+    buckets = sorted(r[0] for r in updates.select(bucket).distinct().collect())
+    merged = updates.select("k", fail_on_seven("k", "s").alias("s"), bucket.alias("__bucket"))
+    with pytest.raises(Exception, match="cannot be evaluated"):
+        store.overwrite_buckets(merged, buckets)
+
+    after = store.read_all()
+    assert after.schema == schema
+    assert sorted(map(tuple, after.collect())) == rows
+    assert sorted(os.listdir(path)) == listing
+    assert not [n for n in os.listdir(path) if "staging" in n]
+    assert os.listdir(tmp_path) == ["failed_merge"]  # nor beside it
+
+
 def test_cached_dashboard_reads_source_once(spark, sf_dir):
     """One refresh is one file scan and one aggregate: no cached relation,
     no per-metric branch, at most 4 Spark jobs per materialisation."""

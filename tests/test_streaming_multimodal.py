@@ -217,6 +217,46 @@ def test_stream_restarts_from_checkpoint_exactly_once(spark, tmp_path):
     assert got == [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]
 
 
+def test_stream_append_sink_is_the_file_sink_and_exactly_once_on_replay(
+    spark, tmp_path, monkeypatch
+):
+    """``_run_stream``'s append-mode parquet sink is Spark's file sink: the
+    sink directory holds its ``_spark_metadata`` log and no per-batch
+    directories. Rerunning the same run directory with batch 0's commit
+    deleted replays batch 0, and the sink skips it: the log already holds
+    that batch, so the read-back keeps its row count."""
+    import os
+
+    from mini_project_big_data_analysis_spark.streaming import pipeline
+
+    ddl = "k long, v string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(i, f"v{i}") for i in range(5)], ddl).coalesce(1).write.parquet(src)
+    run_dir = str(tmp_path / "append_replay")
+
+    def run():
+        monkeypatch.setattr(pipeline, "PROGRESS_SINK", [])
+        stream = spark.readStream.schema(ddl).parquet(src)
+        out = pipeline._run_stream(spark, stream, run_dir, sink=ddl).count()
+        batches = pipeline.PROGRESS_SINK[0]["progress"]
+        return out, [(p["batchId"], p["numInputRows"]) for p in batches]
+
+    count, batches = run()
+    assert count == 5 and batches == [(0, 5)]
+    names = os.listdir(os.path.join(run_dir, "sink"))
+    assert "_spark_metadata" in names
+    assert not [n for n in names if n.startswith("batch_id=")]
+
+    commits = os.path.join(run_dir, "ck", "commits")
+    for name in ("0", ".0.crc"):  # the commit and its Hadoop checksum
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    count, batches = run()
+    # batch 0 ran again, and the sink found it in its log: nothing executed
+    assert batches == [(0, 0)]
+    assert count == 5
+
+
 def test_stream_budget_exhaustion_raises_not_partial(spark, sf_dir, monkeypatch):
     """A query still running when the completion budget expires must raise,
     never hand the caller a partial sink table (found at the sf100 tier:
