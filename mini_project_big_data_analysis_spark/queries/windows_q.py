@@ -144,9 +144,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load(spark, sf_dir, "region")
     path = scratch_dir("csv")
     region.write.mode("overwrite").option("header", "true").csv(path)
-    return spark.read.schema("r_regionkey INT, r_name STRING").option(
-        "header", "true"
-    ).csv(path)
+    return spark.read.schema(region.schema).option("header", "true").csv(path)
 
 
 @register(

@@ -1,21 +1,16 @@
-"""Events-table reader: ns-timestamp parquet handling + pushdown-preserving
-time-range scans.
+"""Events-table reader: ``ts`` as a µs timestamp whatever the file stores,
+plus pushdown-preserving time-range scans.
 
-The driver's ``events.parquet`` stores ``ts`` as INT64 TIMESTAMP(NANOS).
-How Spark surfaces that column depends on the runtime:
-
-- newer readers infer it natively as TIMESTAMP_NTZ (nanos truncated to the
-  µs the type carries — the same truncation DuckDB applies reading ns into
-  its µs TIMESTAMP);
-- older readers refuse it (PARQUET_TYPE_ILLEGAL) unless
-  ``spark.sql.legacy.parquet.nanosAsLong`` is set, in which case the column
-  arrives as a raw INT64 of nanoseconds.
-
-``load_events`` adapts to whichever schema the runtime produces and always
-returns ``ts`` as a proper µs TimestampType with identical values, so every
-downstream query is runtime-agnostic. The stream readers take the same
-probed schema and ``ts`` conversion (``stream_events``), so batch and
-stream change session conf under the same single condition.
+The scan schema comes from ``readers.scan_schema`` like every other table's.
+The fixtures store ``ts`` as INT64 TIMESTAMP(MICROS) without UTC adjustment,
+which Spark reads as TIMESTAMP_NTZ. A file that stores INT64
+TIMESTAMP(NANOS) is read natively by newer readers (truncated to µs, as
+DuckDB does) and refused by older ones unless ``nanosAsLong`` is set, in
+which case ``ts`` arrives as a LONG of nanoseconds. ``ts_to_timestamp`` turns
+each of these into a µs TimestampType with identical values, so every
+downstream query is runtime-agnostic. ``load_events`` (batch) and
+``stream_events`` (stream) share that schema and conversion, so both change
+session conf under the same single condition.
 
 Pushdown: the time range is applied to the column AS THE SCAN PRODUCES IT
 (long ns compared to long literals, or native timestamp compared to
@@ -27,15 +22,13 @@ and reading a decade.
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, LongType, StructType
+from pyspark.sql.types import DataType, LongType
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+from .readers import scan_schema
 
 
 def _ts_ns_literal(ts: str) -> int:
@@ -43,48 +36,8 @@ def _ts_ns_literal(ts: str) -> int:
     return int(dt.timestamp()) * 1_000_000_000
 
 
-#: (path, mtime_ns, size) → the schema the runtime's reader infers for that
-#: file. The probe itself is a footer-inference pass (~100-150 ms of driver
-#: time, round-17 measurement) that load_events used to pay ON EVERY CALL;
-#: the runtime's answer for a given file can't change within a process, so
-#: it is probed once and later reads pass the probed schema as is (footer
-#: reads skipped). Keyed on mtime+size so a rewritten file re-probes. Caches
-#: a SCHEMA, never data or file listings — every query still scans the
-#: parquet.
-_SCHEMA_CACHE: dict[tuple, StructType] = {}
-
-
-def events_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema this runtime's reader gives the events file at ``path``,
-    probing the footer only on first contact with a given file. A reader
-    that refuses INT64(TIMESTAMP(NANOS)) (PARQUET_TYPE_ILLEGAL) gets
-    ``nanosAsLong`` set on ``spark`` and a long ``ts``; that is the only
-    case in which this writes conf. Any other error (a missing path, say)
-    propagates with the session conf untouched."""
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, 0, 0)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        try:
-            schema = spark.read.parquet(path).schema
-        except AnalysisException as exc:
-            if exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
-                raise
-            spark.conf.set(_NANOS_CONF, "true")
-            schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    elif isinstance(schema["ts"].dataType, LongType):
-        # the cached schema came from the legacy fallback; a sibling session
-        # created after the probe needs the conf too (session-scoped)
-        spark.conf.set(_NANOS_CONF, "true")
-    return schema
-
-
 def ts_to_timestamp(raw: DataFrame, ts_type: DataType) -> DataFrame:
-    """``raw`` with its scanned ``ts`` (of ``ts_type``, as ``events_schema``
+    """``raw`` with its scanned ``ts`` (of ``ts_type``, as ``scan_schema``
     gives it) as a µs TimestampType: a long of nanoseconds is truncated to
     µs; NTZ wall time was written as UTC instants and the session runs in
     UTC (session.py), so the cast re-labels without shifting values."""
@@ -95,17 +48,11 @@ def ts_to_timestamp(raw: DataFrame, ts_type: DataType) -> DataFrame:
     return raw
 
 
-def _events_scan(spark: SparkSession, path: str):
-    """The raw events scan and its runtime ``ts`` type."""
-    schema = events_schema(spark, path)
-    return spark.read.schema(schema).parquet(path), schema["ts"].dataType
-
-
 def stream_events(spark: SparkSession, src_dir: str, schema_file: str, **options) -> DataFrame:
     """File-source stream over the events files in ``src_dir``, read the way
     ``load_events`` reads ``schema_file`` (same schema, same ``ts``
     conversion); ``options`` go to the stream reader."""
-    schema = events_schema(spark, schema_file)
+    schema = scan_schema(spark, schema_file, "events")
     raw = spark.readStream.schema(schema).options(**options).parquet(src_dir)
     return ts_to_timestamp(raw, schema["ts"].dataType)
 
@@ -121,7 +68,9 @@ def load_events(
     whole-second bounds) is applied to the raw scan column so it reaches the
     parquet scan as a pushed filter / row-group prune.
     """
-    raw, ts_type = _events_scan(spark, f"{sf_dir}/events.parquet")
+    path = f"{sf_dir}/events.parquet"
+    schema = scan_schema(spark, path, "events")
+    raw, ts_type = spark.read.schema(schema).parquet(path), schema["ts"].dataType
     if ts_between is not None:
         lo, hi = ts_between
         if isinstance(ts_type, LongType):

@@ -4,14 +4,32 @@ The reference's sources are a REST poll loop (producer.py:15-24) and a Kafka
 consumer (consumer.py:18-25). In the batch engine both collapse to schema'd
 scans; the streaming equivalents live in ``streaming/``.
 
-Every reader declares its schema (schemas.py) so Catalyst plans against known
-types and parquet scans get column pruning + predicate pushdown without an
-inference pass over the footer of every file — at 100 TB an inference pass is
-itself a job.
+Every table scan, batch or stream, takes its schema from ``scan_schema``:
+the declared columns of ``schemas.py``, in declared order, each with the
+type the file's own footer gives it. The footer is probed once per file
+version (path, mtime, size) per process; every later read passes the
+cached schema, so no read repeats the inference pass (at 100 TB a pass over
+every footer is itself a job). The probe is checked against the declaration
+under one rule:
+
+- a column declared ``TimestampType`` may be TIMESTAMP or TIMESTAMP_NTZ in
+  the footer (the TPC-H date columns of the fixtures are NTZ);
+- the events ``ts`` may also be a LONG of nanoseconds, which is how a
+  reader that refuses INT64 TIMESTAMP(NANOS) surfaces it under
+  ``nanosAsLong`` (``sources/events.py`` converts it);
+- every other column has exactly its declared type.
+
+Anything else — a missing or renamed column, a changed type — raises before
+the scan is built, naming the table, the column, the footer type and the
+declared type, instead of reading as NULLs or failing inside a task.
+Footer columns that are not declared are not scanned.
 """
 
 from __future__ import annotations
 
+import os
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,48 +38,81 @@ from ..schemas import TABLE_SCHEMAS
 
 TABLES = tuple(TABLE_SCHEMAS)
 
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
-def _with_ntz(schema: T.StructType, *fields: str) -> T.StructType:
-    """The declared schema with the named timestamp fields as NTZ — what
-    the fixture footers actually carry for the TPC-H date columns."""
-    return T.StructType(
-        [
-            T.StructField(f.name, T.TimestampNTZType(), f.nullable)
-            if f.name in fields
-            else f
-            for f in schema.fields
-        ]
-    )
+#: (path, mtime_ns, size) → (the schema the reader infers from that file's
+#: footer, whether it was inferred under ``nanosAsLong``). Keyed on
+#: mtime+size so a rewritten file re-probes. Caches a schema, never data or
+#: file listings: every query still scans the parquet.
+_FOOTERS: dict[tuple, tuple[T.StructType, bool]] = {}
 
 
-#: Footer-identical scan schemas (round 17, guide §1.2 fixed-cost audit).
-#: ``spark.read.parquet`` without a schema runs a driver-side footer
-#: inference pass PER CALL — measured 92–150 ms per read_table call at
-#: sf0.1, about HALF the total cost of every sub-second catalog id; with
-#: an explicit schema the same call is 27–60 ms. The schemas below are
-#: byte-identical to what inference returns on every fixture SF
-#: (verified across sf0.001/0.01/0.1: the only deltas from the DECLARED
-#: schemas.py contract are o_orderdate/l_shipdate, which the footers
-#: store as TIMESTAMP_NTZ), so plans, types, and results are unchanged —
-#: the full 245-id differential pins that. At 100 TB skipping the footer
-#: pass per query is the same win the module docstring always claimed.
-_SCAN_SCHEMAS: dict[str, T.StructType] = {
-    **{n: s for n, s in TABLE_SCHEMAS.items()},
-    "orders": _with_ntz(TABLE_SCHEMAS["orders"], "o_orderdate"),
-    "lineitem": _with_ntz(TABLE_SCHEMAS["lineitem"], "l_shipdate"),
-}
+def _footer(spark: SparkSession, path: str) -> tuple[T.StructType, bool]:
+    """The footer schema of ``path``, probed on first contact with a given
+    file version. A reader that refuses INT64 TIMESTAMP(NANOS)
+    (PARQUET_TYPE_ILLEGAL) gets ``nanosAsLong`` set on ``spark`` and probes
+    again; that is the only case in which this writes conf. Any other error
+    (a missing path, say) propagates with the session conf untouched."""
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = (path, 0, 0)
+    if key not in _FOOTERS:
+        try:
+            footer = spark.read.parquet(path).schema
+        except AnalysisException as exc:
+            if exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
+                raise
+            spark.conf.set(_NANOS_CONF, "true")
+            footer = spark.read.parquet(path).schema
+        _FOOTERS[key] = footer, spark.conf.get(_NANOS_CONF, "false") == "true"
+    return _FOOTERS[key]
+
+
+def _allowed(table: str, want: T.StructField, found: T.DataType, nanos: bool) -> bool:
+    if found == want.dataType:
+        return True
+    if not isinstance(want.dataType, T.TimestampType):
+        return False
+    if isinstance(found, T.LongType):
+        return nanos and (table, want.name) == ("events", "ts")
+    return isinstance(found, T.TimestampNTZType)
+
+
+def scan_schema(spark: SparkSession, path: str, table: str) -> T.StructType:
+    """The schema to scan ``path`` with as the declared table ``table``: its
+    ``schemas.py`` columns in declared order, with their footer types,
+    checked under the module's rule. Raises ``ValueError`` on drift."""
+    footer, nanos = _footer(spark, path)
+    fields = []
+    for want in TABLE_SCHEMAS[table].fields:
+        found = footer[want.name] if want.name in footer.names else None
+        if found is None or not _allowed(table, want, found.dataType, nanos):
+            got = found.dataType.simpleString() if found else "not present"
+            raise ValueError(
+                f"{table} ({path}): column {want.name!r} is {got} in the footer,"
+                f" declared {want.dataType.simpleString()}; footer columns: {footer.names}"
+            )
+        fields.append(found)
+    if table == "events" and isinstance(footer["ts"].dataType, T.LongType):
+        # a cached probe may come from another session; the conf is
+        # session-scoped, and this one needs it to scan ns as a long too
+        spark.conf.set(_NANOS_CONF, "true")
+    return T.StructType(fields)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver table (full-collection scan analog, app.py:35-36)
-    with the footer-identical explicit schema (no per-call inference)."""
+    with its checked scan schema."""
     if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLE_SCHEMAS)}")
     if name == "events":
         from .events import load_events
 
         return load_events(spark, sf_dir)
-    return spark.read.schema(_SCAN_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(scan_schema(spark, path, name)).parquet(path)
 
 
 def read_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:

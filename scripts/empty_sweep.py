@@ -22,30 +22,20 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mini_project_big_data_analysis_spark.schemas import TABLE_SCHEMAS  # noqa: E402
+
 SRC_SF_DIR = "/root/testdata/sf0.001"
 EMPTY_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testdata_empty")
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TABLES = tuple(TABLE_SCHEMAS)
 
 
 def build_empty_fixture(out_dir: str | None = None) -> str:
     """Write zero-row copies of every driver table, preserving parquet schema.
 
-    Copies happen at the RAW parquet level (``events``' ns-timestamp INT64
-    physical type is part of what ``load_events`` adapts to, so the empty
-    fixture must preserve physical types rather than round-trip through
-    Spark's µs TimestampType).
+    Copies happen at the raw parquet level, so each zero-row footer keeps
+    the source's physical types (the NTZ date and ``ts`` columns among
+    them), which ``readers.scan_schema`` checks like any other footer.
     """
     out_dir = out_dir or EMPTY_DIR
     os.makedirs(out_dir, exist_ok=True)

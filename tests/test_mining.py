@@ -163,8 +163,8 @@ def test_bfs_depth_unreachable_absent(spark, tmp_path):
     os.makedirs(d, exist_ok=True)
     # ids 1..6, no id % 97 == 0 → no seeds → empty result
     docs = spark.createDataFrame(
-        [(i, f"text {i}", "en", "s", 5) for i in range(1, 7)],
-        "doc_id long, text string, lang string, source string, n_tokens long",
+        [(i, f"text {i}", "en", "s", None) for i in range(1, 7)],
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     out = ext_graph_bfs_depth(spark, d)

@@ -730,8 +730,8 @@ def test_cbo_histogram_fixes_skewed_selectivity(spark, sf_dir):
     }
     table = "cbo_hist_events_pin"
     try:
-        # events.parquet carries an INT64-ns ts column: footer schema maps
-        # only under nanosAsLong (sources/events.py) — needed at CREATE
+        # the fixtures' events ts is INT64 µs (NTZ); nanosAsLong lets the
+        # CREATE map an INT64-ns ts too, as sources/readers.py's fallback does
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         for k in _CBO_KEYS:
             spark.conf.set(k, "true")

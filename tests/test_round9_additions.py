@@ -129,9 +129,10 @@ def test_dup_cluster_stats_planted_classes(spark, tmp_path):
         + [(10 + i, f"unique {i}") for i in range(5)]  # five singletons
         + [(20, None), (21, None)]  # NULLs excluded, never a class
     )
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
-        str(tmp_path / "documents.parquet")
-    )
+    spark.createDataFrame(
+        [(i, t, None, None, None) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
     from mini_project_big_data_analysis_spark.queries.ext_dedup_q import (
         ext_dup_cluster_stats,
     )

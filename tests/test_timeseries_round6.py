@@ -535,12 +535,12 @@ def test_span_dedup_survives_short_documents(spark, tmp_path):
     long_txt = "a b c d e f g h tail" + " filler" * 4
     spark.createDataFrame(
         [
-            (1, "one two three", "en", 13),
-            (2, "", "en", 0),
-            (3, long_txt, "en", len(long_txt)),
-            (4, long_txt, "en", len(long_txt)),
+            (1, "one two three", "en", None, 13),
+            (2, "", "en", None, 0),
+            (3, long_txt, "en", None, len(long_txt)),
+            (4, long_txt, "en", None, len(long_txt)),
         ],
-        "doc_id long, text string, lang string, n_chars long",
+        "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(f"{tmp_path}/documents.parquet")
     rows = REGISTRY["ext_span_dedup"].fn(spark, str(tmp_path)).collect()
     assert {r.doc_id for r in rows} == {3, 4}, rows
